@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -404,6 +405,18 @@ def _release_cached(spark) -> None:
         pass
 
 
+def _latest_round_snapshot(directory: str) -> tuple[int, str] | None:
+    """(round, path) of the highest-numbered ``BENCH_FULL_r<N>.json`` in
+    ``directory``, or None. Names with anything between the round number
+    and ``.json`` (ad-hoc re-runs) are not round snapshots."""
+    snaps = []
+    for f in os.listdir(directory):
+        m = re.fullmatch(r"BENCH_FULL_r(\d+)\.json", f)
+        if m:
+            snaps.append((int(m.group(1)), os.path.join(directory, f)))
+    return max(snaps) if snaps else None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -461,17 +474,10 @@ def main() -> None:
     # always the prior round, by construction.
     here = os.path.dirname(os.path.abspath(__file__))
     vs_prev = None
-    snaps = sorted(
-        (
-            int(f.rsplit("_r", 1)[1].split(".")[0]),
-            os.path.join(here, f),
-        )
-        for f in os.listdir(here)
-        if f.startswith("BENCH_FULL_r") and f.endswith(".json")
-    )
-    if snaps:
-        prev_round, prev_path = snaps[-1]
-        try:
+    try:
+        snap = _latest_round_snapshot(here)
+        if snap is not None:
+            prev_round, prev_path = snap
             with open(prev_path) as fh:
                 prev = json.load(fh)
             if prev.get("sf") == sf_val:
@@ -486,8 +492,8 @@ def main() -> None:
                         "prev_common_sec": round(prev_c, 3),
                         "ratio": round(cur_c / prev_c, 3),
                     }
-        except Exception:
-            pass  # a malformed snapshot must not sink the bench run
+    except Exception:
+        pass  # a malformed snapshot must not sink the bench run
 
     # Full per-query detail goes to a file: the driver that records the
     # printed line keeps only a ~2000-char tail of stdout, and BENCH_r04

@@ -36,20 +36,6 @@ def find_aggregate(value_expr: Column, find_op: str, alias: str | None = None) -
     return FIND_FUNCS[find_op](value_expr).alias(alias or find_op)
 
 
-def summary_aggregates(value_expr: Column, prefix: str = "") -> list[Column]:
-    """count+sum+min+max+avg in one pass — the reference's
-    genericSummarizingHistogram (AbstractQueryEngine.java:975-982). One scan,
-    five aggregates, identical partial-aggregation behavior."""
-    p = f"{prefix}_" if prefix else ""
-    return [
-        F.count(F.lit(1)).alias(f"{p}count"),
-        F.sum(value_expr).alias(f"{p}sum"),
-        F.min(value_expr).alias(f"{p}min"),
-        F.max(value_expr).alias(f"{p}max"),
-        F.avg(value_expr).alias(f"{p}avg"),
-    ]
-
-
 def exact_distinct_two_stage(
     df, group: str, value: str, alias: str = "n_distinct"
 ):

@@ -1,9 +1,10 @@
 """Histogram output rendering — CSV / JSON / Chart.js shapes.
 
 Ports queries/Histograms.java:52-183 (toChartJsJson, toJson, toCsv,
-twoLeveltoCsv). These run on the already-aggregated (tiny) result, driver
-side; the key-order contract (canonical bin order for time histograms,
-zero-filled — Histograms.orderByKeyOrder) is preserved upstream by
+twoLeveltoCsv, which is to_csv over the histogram2 frame). These run on
+the already-aggregated (tiny) result, driver side; the key-order
+contract (canonical bin order for time histograms, zero-filled —
+Histograms.orderByKeyOrder) is preserved upstream by
 postops.order_by_key_order, so rendering only formats.
 """
 
@@ -33,11 +34,6 @@ def to_csv(histogram: DataFrame, header: bool = False) -> str:
         lines.append(",".join(histogram.columns))
     lines.extend(",".join(str(v) for v in r) for r in _rows(histogram))
     return "\n".join(lines) + "\n"
-
-
-def two_level_to_csv(histogram2: DataFrame) -> str:
-    """key1,key2,value lines (Histograms.twoLeveltoCsv)."""
-    return to_csv(histogram2)
 
 
 def two_level_to_json(histogram2: DataFrame) -> str:

@@ -904,24 +904,6 @@ def simhash_block_diagnostic(
     )
 
 
-def simhash_near_pairs(
-    df: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    blocks: int = 4,
-    token_hash=None,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance with block
-    partitioning (see simhash_pairs_from_sigs for the recall guarantee
-    and the blocks dial)."""
-    return simhash_pairs_from_sigs(
-        simhash_signatures(df, text, id_col, token_hash=token_hash),
-        max_hamming,
-        blocks=blocks,
-    )
-
-
 def dup_clusters(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Connected components over the near-dup pair graph: every document
     gets cluster = min(doc id reachable through pairs), so each dup group

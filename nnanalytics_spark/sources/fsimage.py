@@ -42,6 +42,15 @@ same way); everything downstream of it still parallelizes. On a real
 cluster pass ``scratch_dir`` on shared storage so executors can read
 the sidecar.
 
+read_fsimage_binary returns a lazy plan: every action on it re-runs the
+decode. The CLI's load path (``__main__._load_inodes``) therefore
+decodes once at load and holds the result MEMORY_AND_DISK, so served
+requests scan Spark's in-memory columnar copy instead of the Python
+decoder. That copy takes 174 KB of storage memory for the 6,051-inode
+fixture image and spills to disk past the storage fraction. A stored
+parquet layout, by contrast, is served as a scan. Callers that read the
+image once (tests, one-off conversions) use the lazy plan as is.
+
 The test/fixture writer (write_fsimage_binary) emits the same
 closed-form namespace as oivgen.write_oiv_xml, deliberately sharing no
 code with the reader, so round-trips cross two implementations and the

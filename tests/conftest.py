@@ -37,10 +37,17 @@ SMOKE_DESELECT_TESTS = frozenset({"test_dtype_parity"})
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_SMOKE") != "1":
         return
+    # a renamed or uncollectable smoke file would otherwise shrink the
+    # gate silently; the lane is run over the whole tests/ directory
+    missing = SMOKE_FILES - {item.path.name for item in items}
+    if missing:
+        raise pytest.UsageError(
+            f"SPARK_GRAFT_SMOKE=1: no tests collected from {sorted(missing)}"
+        )
     keep, dropped = [], []
     for item in items:
         in_smoke = (
-            Path(str(item.fspath)).name in SMOKE_FILES
+            item.path.name in SMOKE_FILES
             and getattr(item, "originalname", item.name) not in SMOKE_DESELECT_TESTS
         )
         (keep if in_smoke else dropped).append(item)

@@ -8,6 +8,9 @@ import http.client
 import io
 import sys
 
+import pytest
+from pyspark import StorageLevel
+
 from nnanalytics_spark import __main__ as cli
 from nnanalytics_spark.inode import fixture
 
@@ -91,3 +94,87 @@ def test_nested_get_spark_preserves_host_session_conf(spark):
     s2 = get_spark("nested-should-reuse")
     assert s2 is spark
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+# --------------------------------------------------------------------------
+# load path: decoded formats are held in memory, parquet stays a scan
+# --------------------------------------------------------------------------
+
+
+def _decoded_source(fmt: str, tmp_path):
+    """(source path, lazy reader) for one decoded --format."""
+    from nnanalytics_spark.sources import fsimage, loader, oivgen
+
+    if fmt == "fsimage":
+        src = fsimage.write_fsimage_binary(str(tmp_path), n_dirs=3, files_per_dir=5)
+        return src, fsimage.read_fsimage_binary
+    if fmt == "oiv-xml":
+        oivgen.write_oiv_xml(str(tmp_path), n_dirs=3, files_per_dir=5)
+        return str(tmp_path), loader.read_fsimage_xml
+    from test_sources import OIV_HEADER, OIV_ROWS
+
+    src = tmp_path / "fsimage.tsv"
+    src.write_text(OIV_HEADER + "\n" + "\n".join(OIV_ROWS) + "\n")
+    return str(src), loader.read_fsimage_csv
+
+
+def _plan(df) -> list:
+    """df's executed-plan operators, not descending into cached relations
+    (InMemoryTableScan is a leaf)."""
+    from nnanalytics_spark.core.planlint import _walk
+
+    return list(_walk(df._jdf.queryExecution().executedPlan()))
+
+
+_LOAD_URLS = (
+    "/filter?set=files&sum=count",
+    "/filter?set=files&filters=fileSize:gte:0&sum=fileSize",
+    "/histogram?set=files&type=user&sum=count",
+)
+
+
+@pytest.mark.parametrize("fmt", ["fsimage", "oiv", "oiv-xml"])
+def test_load_decoded_formats_serve_from_memory(spark, tmp_path, fmt):
+    from nnanalytics_spark.core import url as urlmod
+    from nnanalytics_spark.inode.engine import INodeEngine
+
+    src, read = _decoded_source(fmt, tmp_path)
+    inodes = cli._load_inodes(spark, src, fmt)
+    try:
+        assert inodes.is_cached
+        assert inodes.storageLevel == StorageLevel.MEMORY_AND_DISK
+        engine, lazy = INodeEngine(inodes), INodeEngine(read(spark, src))
+
+        df = urlmod.run_url(engine, "/filter?set=files&sum=count", now_ms=fixture.NOW_MS)
+        df.collect()
+        nodes = [n.getClass().getSimpleName() for n in _plan(df)]
+        assert "InMemoryTableScanExec" in nodes, nodes
+        assert not [n for n in nodes if "Python" in n or "Pandas" in n], nodes
+
+        for u in _LOAD_URLS:
+            got = urlmod.run_url(engine, u, now_ms=fixture.NOW_MS).collect()
+            want = urlmod.run_url(lazy, u, now_ms=fixture.NOW_MS).collect()
+            assert sorted(map(tuple, got)) == sorted(map(tuple, want)), u
+            assert got, u
+    finally:
+        inodes.unpersist()
+
+
+def test_load_parquet_stays_a_pruned_scan(spark, tmp_path):
+    from nnanalytics_spark.core import url as urlmod
+    from nnanalytics_spark.inode.engine import INodeEngine
+    from nnanalytics_spark.sources import layout
+
+    src = str(tmp_path / "layout")
+    pdf = fixture.generate_pandas(levels=1, dirs_per_level=2, files_per_dir=6)
+    layout.write_inode_table(spark.createDataFrame(pdf, schema=fixture.SCHEMA), src, 2)
+    inodes = cli._load_inodes(spark, src, "parquet")
+    assert not inodes.is_cached
+
+    df = urlmod.run_url(INodeEngine(inodes), "/filter?set=files&sum=count", now_ms=fixture.NOW_MS)
+    assert df.collect()[0][0] == int((pdf.type == "file").sum())
+    scans = [n for n in _plan(df) if n.getClass().getSimpleName() == "FileSourceScanExec"]
+    assert scans
+    for scan in scans:
+        pf = scan.partitionFilters().toString()
+        assert "type" in pf and "file" in pf, pf

@@ -173,3 +173,20 @@ def test_smoke_lane_files_exist():
     tests_dir = Path(conftest.__file__).resolve().parent
     for fname in conftest.SMOKE_FILES:
         assert (tests_dir / fname).is_file(), f"smoke-lane file missing: {fname}"
+
+
+def test_smoke_lane_fails_on_uncollected_file(tmp_path):
+    """The smoke lane refuses to run when a SMOKE_FILES name matched no
+    collected test, so a rename cannot shrink the gate unnoticed."""
+    import os
+    import subprocess
+
+    tests_dir = Path(__file__).resolve().parent
+    env = {**os.environ, "SPARK_GRAFT_SMOKE": "1"}
+    proc = subprocess.run(
+        [sys.executable, "-m", "pytest", str(tests_dir / "test_render.py"),
+         "--collect-only", "-q", "-p", "no:cacheprovider"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode != 0
+    assert "test_oracle_battery.py" in proc.stdout + proc.stderr
