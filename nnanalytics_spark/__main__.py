@@ -9,14 +9,26 @@ query from the command line.
     python -m nnanalytics_spark query --source ... \
         "/histogram?set=files&type=user&sum=count"
 
-``--format parquet`` (the stored layout, ``sources.layout``) is scanned
-on every request, with partition pruning. The decoded formats
-(``fsimage``, ``oiv``, ``oiv-xml``) are decoded once at load and held
-``MEMORY_AND_DISK`` in Spark's columnar cache, so no request re-runs the
-decoder. That copy lives in Spark storage memory, compressed by
-column: the 6,051-inode fixture image takes 174 KB (about 29 bytes per
-inode; the fixture's names repeat, so a real image may compress less).
-Past the storage fraction it spills to local disk.
+How the namespace is held depends on its bytes on disk. The limit is
+``ONE_PARTITION_MAX_BYTES`` (8 MiB), or one file split
+(``spark.sql.files.maxPartitionBytes``) if that is smaller:
+
+- a source within the limit, in any format, is read once and held
+  ``MEMORY_AND_DISK`` as ONE partition. A request then runs one task
+  with no shuffle: the copy reports SinglePartition, so an aggregate
+  plans with no Exchange. On the 101,111-inode parquet fixture (3.1 MB)
+  a served request went from about 7 tasks in 2.3 stages to one task.
+- a bigger source keeps its split: ``fsimage``, ``oiv`` and ``oiv-xml``
+  are decoded once and held at the reader's partitions; ``parquet``
+  (the stored layout, ``sources.layout``) is scanned on every request,
+  and its ``type`` partitions prune ``set=files|dirs``.
+
+The held copy lives in Spark storage memory, compressed by column: the
+6,051-inode fixture image takes 174 KB (about 29 bytes per inode; the
+fixture's names repeat, so a real image may compress less). Past the
+storage fraction it spills to local disk. Loading pays for it: the
+one-shot ``query`` command makes one extra pass over a small table
+before it answers.
 
 ``--conf`` accepts the reference's .properties names where they map to
 implemented features (ApplicationConfiguration.java:90-280):
@@ -48,26 +60,67 @@ def _read_properties(path: str | None) -> dict[str, str]:
     return props
 
 
+#: Largest source held as one partition. On a 4-core host one client's
+#: /filter and /histogram over one cached partition beat the 4-split
+#: parquet scan up to about 10 MB and lost from about 16 MB on (the
+#: histogram first); 8 MiB keeps below that break-even.
+ONE_PARTITION_MAX_BYTES = 8 << 20
+
+
+def _source_bytes(spark, source: str) -> int:
+    """Bytes on disk under ``source`` (a file or a directory), from one
+    Hadoop ``getContentSummary`` call."""
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(source)
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs.getContentSummary(path).getLength()
+
+
 def _load_inodes(spark, source: str, fmt: str):
     """The one load path of serve, sweep and query (see the module
-    docstring). parquet stays a lazy scan so its ``type`` partitions
-    still prune ``set=files|dirs``; a cached copy would lose that.
-    persist, unlike localCheckpoint, keeps the decoded table's lineage."""
+    docstring). A source within ``ONE_PARTITION_MAX_BYTES`` and one file
+    split is held ``MEMORY_AND_DISK`` as one partition, whatever its
+    format. It is read at the reader's own split, so the decoders keep
+    their parallelism, and the held copy is then coalesced: it reports
+    SinglePartition, so aggregates plan with no Exchange and a request
+    runs one task. A bigger source keeps its split: a decoded format is
+    held at the reader's partitions, and parquet stays a lazy scan whose
+    ``type`` partitions prune ``set=files|dirs``. persist, unlike
+    localCheckpoint, keeps lineage. One line on stderr names the path
+    taken."""
     from pyspark import StorageLevel
 
     from nnanalytics_spark.sources import fsimage, loader
 
-    if fmt == "parquet":
-        return spark.read.parquet(source)
     readers = {
+        "parquet": lambda s, path: s.read.parquet(path),
         "oiv": loader.read_fsimage_csv,
         "oiv-xml": loader.read_fsimage_xml,
         "fsimage": fsimage.read_fsimage_binary,
     }
     if fmt not in readers:
         raise SystemExit(f"unknown --format {fmt!r}")
-    inodes = readers[fmt](spark, source).persist(StorageLevel.MEMORY_AND_DISK)
-    inodes.count()
+    size = _source_bytes(spark, source)
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    limit = min(ONE_PARTITION_MAX_BYTES, split)
+    small = size <= limit
+    inodes = readers[fmt](spark, source)
+    if small or fmt != "parquet":
+        inodes = inodes.persist(StorageLevel.MEMORY_AND_DISK)
+        inodes.count()
+    if small:
+        wide = inodes
+        inodes = wide.coalesce(1).persist(StorageLevel.MEMORY_AND_DISK)
+        inodes.count()
+        wide.unpersist()
+    held = "cached" if inodes.is_cached else "scanned"
+    print(
+        f"nnanalytics_spark: loaded {fmt} {source}: {size} bytes "
+        f"({'<=' if small else '>'} limit {limit}), {held}, "
+        f"{inodes.rdd.getNumPartitions()} partition(s)",
+        file=sys.stderr,
+        flush=True,
+    )
     return inodes
 
 

@@ -226,13 +226,15 @@ def run_sweep(inodes: DataFrame, now_ms: int, output_dir: str | None = None) -> 
     if output_dir:
         for name, df in reports.items():
             df.write.mode("overwrite").parquet(f"{output_dir}/{name}")
-        history = reports["fileScalars"].withColumn("sweepTs", F.lit(now_ms))
+        # the history row is the fileScalars row just written, read back
+        # rather than aggregated over the namespace a second time
+        spark = inodes.sparkSession
+        history = spark.read.parquet(f"{output_dir}/fileScalars").withColumn("sweepTs", F.lit(now_ms))
         history.write.mode("append").parquet(f"{output_dir}/history")
         # sweep timestamp marker: time-relative reports (fileAge, the
         # per-age scalars) are only valid near their sweep-time `now`;
         # readers use this to decide staleness. One-row parquet so it
         # works on any Hadoop-visible filesystem, not just local disk.
-        spark = inodes.sparkSession
         from nnanalytics_spark.core.smalldf import local_df
 
         local_df(spark, [(now_ms,)], "sweepTs long").write.mode(

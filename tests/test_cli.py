@@ -4,9 +4,12 @@ against a served engine."""
 
 from __future__ import annotations
 
+import contextlib
 import http.client
 import io
 import sys
+import time
+import types
 
 import pytest
 from pyspark import StorageLevel
@@ -75,7 +78,9 @@ def test_cli_serve_http_roundtrip(spark, tmp_path, monkeypatch):
         raise KeyboardInterrupt  # serve's documented shutdown path
 
     monkeypatch.setattr(websrv.AnalyticsWebServer, "start", capture_start)
-    monkeypatch.setattr(cli.time, "sleep", probe_then_stop)
+    # patch the CLI's view of `time` only: patching time.sleep itself
+    # also hands the probe to py4j's own threads
+    monkeypatch.setattr(cli, "time", types.SimpleNamespace(sleep=probe_then_stop, time=time.time))
     f = tmp_path / "app.properties"
     f.write_text("nna.port=0\n")
     rc = cli.main(["serve", "--source", src, "--conf", str(f)])
@@ -97,7 +102,8 @@ def test_nested_get_spark_preserves_host_session_conf(spark):
 
 
 # --------------------------------------------------------------------------
-# load path: decoded formats are held in memory, parquet stays a scan
+# load path: a source within the one-partition limit is held as one cached
+# partition; a bigger one keeps its split (parquet stays a pruned scan)
 # --------------------------------------------------------------------------
 
 
@@ -118,12 +124,38 @@ def _decoded_source(fmt: str, tmp_path):
     return str(src), loader.read_fsimage_csv
 
 
+def _layout_source(spark, tmp_path):
+    """(layout path, fixture pdf): the stored parquet layout, partitioned
+    by ``type``."""
+    from nnanalytics_spark.sources import layout
+
+    src = str(tmp_path / "layout")
+    pdf = fixture.generate_pandas(levels=1, dirs_per_level=2, files_per_dir=6)
+    layout.write_inode_table(spark.createDataFrame(pdf, schema=fixture.SCHEMA), src, 2)
+    return src, pdf
+
+
 def _plan(df) -> list:
     """df's executed-plan operators, not descending into cached relations
     (InMemoryTableScan is a leaf)."""
     from nnanalytics_spark.core.planlint import _walk
 
     return list(_walk(df._jdf.queryExecution().executedPlan()))
+
+
+@contextlib.contextmanager
+def _split_bytes(spark, value: str):
+    """Run with ``spark.sql.files.maxPartitionBytes`` set to value."""
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
 
 
 _LOAD_URLS = (
@@ -133,23 +165,30 @@ _LOAD_URLS = (
 )
 
 
-@pytest.mark.parametrize("fmt", ["fsimage", "oiv", "oiv-xml"])
-def test_load_decoded_formats_serve_from_memory(spark, tmp_path, fmt):
+def _assert_one_cached_partition(spark, src, fmt, read, capsys):
+    """The small-side rule: one MEMORY_AND_DISK partition, requests plan
+    with no Exchange and no Python node, answers equal the lazy reader's,
+    and the load line on stderr says so."""
     from nnanalytics_spark.core import url as urlmod
     from nnanalytics_spark.inode.engine import INodeEngine
 
-    src, read = _decoded_source(fmt, tmp_path)
+    capsys.readouterr()
     inodes = cli._load_inodes(spark, src, fmt)
     try:
         assert inodes.is_cached
         assert inodes.storageLevel == StorageLevel.MEMORY_AND_DISK
+        assert inodes.rdd.getNumPartitions() == 1
+        err = capsys.readouterr().err
+        assert f"loaded {fmt} {src}" in err and "cached, 1 partition" in err, err
         engine, lazy = INodeEngine(inodes), INodeEngine(read(spark, src))
 
-        df = urlmod.run_url(engine, "/filter?set=files&sum=count", now_ms=fixture.NOW_MS)
-        df.collect()
-        nodes = [n.getClass().getSimpleName() for n in _plan(df)]
-        assert "InMemoryTableScanExec" in nodes, nodes
-        assert not [n for n in nodes if "Python" in n or "Pandas" in n], nodes
+        for u in ("/filter?set=files&sum=count", "/histogram?set=files&type=user&sum=count"):
+            df = urlmod.run_url(engine, u, now_ms=fixture.NOW_MS)
+            df.collect()
+            nodes = [n.getClass().getSimpleName() for n in _plan(df)]
+            assert "InMemoryTableScanExec" in nodes, (u, nodes)
+            assert "ShuffleExchangeExec" not in nodes, (u, nodes)
+            assert not [n for n in nodes if "Python" in n or "Pandas" in n], (u, nodes)
 
         for u in _LOAD_URLS:
             got = urlmod.run_url(engine, u, now_ms=fixture.NOW_MS).collect()
@@ -160,21 +199,55 @@ def test_load_decoded_formats_serve_from_memory(spark, tmp_path, fmt):
         inodes.unpersist()
 
 
-def test_load_parquet_stays_a_pruned_scan(spark, tmp_path):
+@pytest.mark.parametrize("fmt", ["fsimage", "oiv", "oiv-xml"])
+def test_load_decoded_formats_serve_from_memory(spark, tmp_path, fmt, capsys):
+    src, read = _decoded_source(fmt, tmp_path)
+    _assert_one_cached_partition(spark, src, fmt, read, capsys)
+
+
+def test_load_small_parquet_serves_from_memory(spark, tmp_path, capsys):
+    src, _ = _layout_source(spark, tmp_path)
+    _assert_one_cached_partition(spark, src, "parquet", lambda s, p: s.read.parquet(p), capsys)
+
+
+def test_load_large_parquet_stays_a_pruned_scan(spark, tmp_path, capsys, monkeypatch):
     from nnanalytics_spark.core import url as urlmod
     from nnanalytics_spark.inode.engine import INodeEngine
-    from nnanalytics_spark.sources import layout
 
-    src = str(tmp_path / "layout")
-    pdf = fixture.generate_pandas(levels=1, dirs_per_level=2, files_per_dir=6)
-    layout.write_inode_table(spark.createDataFrame(pdf, schema=fixture.SCHEMA), src, 2)
-    inodes = cli._load_inodes(spark, src, "parquet")
-    assert not inodes.is_cached
+    src, pdf = _layout_source(spark, tmp_path)
+    # the limit is the smaller of ONE_PARTITION_MAX_BYTES and one split
+    with monkeypatch.context() as m:
+        m.setattr(cli, "ONE_PARTITION_MAX_BYTES", 256)
+        assert not cli._load_inodes(spark, src, "parquet").is_cached
+    capsys.readouterr()
+    with _split_bytes(spark, "256b"):
+        inodes = cli._load_inodes(spark, src, "parquet")
+        assert not inodes.is_cached
+        assert "scanned" in capsys.readouterr().err
 
-    df = urlmod.run_url(INodeEngine(inodes), "/filter?set=files&sum=count", now_ms=fixture.NOW_MS)
-    assert df.collect()[0][0] == int((pdf.type == "file").sum())
-    scans = [n for n in _plan(df) if n.getClass().getSimpleName() == "FileSourceScanExec"]
+        df = urlmod.run_url(INodeEngine(inodes), "/filter?set=files&sum=count", now_ms=fixture.NOW_MS)
+        assert df.collect()[0][0] == int((pdf.type == "file").sum())
+        scans = [n for n in _plan(df) if n.getClass().getSimpleName() == "FileSourceScanExec"]
     assert scans
     for scan in scans:
         pf = scan.partitionFilters().toString()
         assert "type" in pf and "file" in pf, pf
+
+
+@pytest.mark.parametrize("fmt", ["fsimage", "oiv", "oiv-xml"])
+def test_load_large_decoded_formats_keep_the_reader_split(spark, tmp_path, fmt, capsys):
+    from nnanalytics_spark.core.planlint import _walk
+
+    src, _ = _decoded_source(fmt, tmp_path)
+    capsys.readouterr()
+    with _split_bytes(spark, "256b"):
+        inodes = cli._load_inodes(spark, src, fmt)
+    try:
+        assert inodes.is_cached
+        assert inodes.storageLevel == StorageLevel.MEMORY_AND_DISK
+        assert "(> limit 256), cached" in capsys.readouterr().err
+        (scan,) = [n for n in _plan(inodes) if n.getClass().getSimpleName() == "InMemoryTableScanExec"]
+        cached = [n.getClass().getSimpleName() for n in _walk(scan.relation().cachedPlan())]
+        assert "CoalesceExec" not in cached, cached
+    finally:
+        inodes.unpersist()

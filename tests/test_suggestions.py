@@ -82,3 +82,11 @@ def test_sweep_writes_history(inodes, tmp_path):
     assert hist.count() == 1
     suggestions.run_sweep(inodes, NOW + 1000, str(tmp_path))
     assert spark.read.parquet(str(tmp_path / "history")).count() == 2
+
+
+def test_sweep_history_row_is_the_file_scalars_row(inodes, tmp_path):
+    suggestions.run_sweep(inodes, NOW, str(tmp_path))
+    spark = inodes.sparkSession
+    (scalars,) = spark.read.parquet(str(tmp_path / "fileScalars")).collect()
+    (hist,) = spark.read.parquet(str(tmp_path / "history")).collect()
+    assert hist.asDict() == {**scalars.asDict(), "sweepTs": NOW}
