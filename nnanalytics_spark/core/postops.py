@@ -9,7 +9,9 @@ ended at the shuffle-reduced groupBy.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _HAVING_OPS = {
@@ -59,6 +61,20 @@ def sort_by_value(df: DataFrame, value_col: str, ascending: bool) -> DataFrame:
     return df.orderBy(order)
 
 
+@functools.lru_cache(maxsize=64)
+def _bin_dimension(spark: SparkSession, key_col: str, labels: tuple[str, ...]) -> DataFrame:
+    """(__ord, key_col) frame of canonical bin labels, built once per
+    (session, key, labels) — every time histogram reuses it. Built
+    JVM-side (range + array literal): a createDataFrame(list) would
+    route through a Python RDD and pay ~2 s of Python-worker startup for
+    24 rows."""
+    array = F.array(*[F.lit(k) for k in labels])
+    return spark.range(len(labels)).select(
+        F.col("id").cast("int").alias("__ord"),
+        F.element_at(array, F.col("id").cast("int") + 1).alias(key_col),
+    )
+
+
 def order_by_key_order(
     df: DataFrame, key_col: str, value_cols: list[str], canonical_keys: list[str]
 ) -> DataFrame:
@@ -66,15 +82,7 @@ def order_by_key_order(
     (Histograms.orderByKeyOrder, queries/Histograms.java:226-232, applied at
     HistogramInvoker.java:142-148). Implemented as a broadcast join against
     the tiny bin-dimension frame + coalesce(value, 0)."""
-    spark = df.sparkSession
-    # build the bin dimension JVM-side (range + array literal): a
-    # createDataFrame(list) would route through a Python RDD and pay ~2 s
-    # of Python-worker startup for 24 rows
-    labels = F.array(*[F.lit(k) for k in canonical_keys])
-    bins = spark.range(len(canonical_keys)).select(
-        F.col("id").cast("int").alias("__ord"),
-        F.element_at(labels, F.col("id").cast("int") + 1).alias(key_col),
-    )
+    bins = _bin_dimension(df.sparkSession, key_col, tuple(canonical_keys))
     # broadcast the aggregated (small) side: a left join can only build its
     # right side, so hinting the bin dimension would be ignored
     out = bins.join(F.broadcast(df), key_col, "left")

@@ -34,10 +34,33 @@ _REPLICA_DERIVED = {"numReplicas", "diskspaceConsumed"}
 
 
 class INodeEngine:
-    """Query surface over one inode DataFrame (stored schema, fixture.py)."""
+    """Query surface over one inode DataFrame (stored schema, fixture.py).
+
+    Plan pieces that no request parameter changes (the /dump projection,
+    the /contentSummary sums) are built once per table, on first use, and
+    dropped when ``inodes`` is reassigned (/refresh), so a new table is
+    never served through plans built over the old one."""
 
     def __init__(self, inodes: DataFrame):
         self.inodes = inodes
+
+    @property
+    def inodes(self) -> DataFrame:
+        return self._inodes
+
+    @inodes.setter
+    def inodes(self, df: DataFrame) -> None:
+        self._inodes = df
+        # table first: a piece built after the new dict appears sees it
+        self._pieces: dict = {}
+
+    def _piece(self, name: str, build):
+        """``build()`` once per table; concurrent first uses may each
+        build, and any of the equal results is kept."""
+        pieces = self._pieces
+        if name not in pieces:
+            pieces[name] = build()
+        return pieces[name]
 
     # ------------------------------------------------------------- helpers
     def _base(self, query: Query) -> DataFrame:
@@ -185,18 +208,23 @@ class INodeEngine:
         return a.crossJoin(b).select((F.col("__a") / F.col("__b")).alias("ratio"))
 
     def content_summary(self, path: str) -> DataFrame:
-        return subtree.content_summary(self.inodes, path)
+        sums = self._piece("content_summary", subtree.content_summary_sums)
+        return subtree.content_summary(self.inodes, path, sums)
+
+    def _dump_projection(self) -> DataFrame:
+        df = self.inodes
+        return df.select(
+            *[spec.expr(df).alias(name) for name, spec in reg.COLUMNS.items()
+              if name not in reg.JOIN_PRODUCED]
+        )
 
     def dump_inode(self, path: str) -> dict:
         """/dump analog: every §1.3 attribute of one inode
         (NamenodeAnalyticsMethods.java:747-770 → VersionContext.java:50-110).
-        Point lookup — the path predicate pushes into the scan."""
-        df = self.inodes.filter(F.col("path") == path)
-        projected = df.select(
-            *[spec.expr(df).alias(name) for name, spec in reg.COLUMNS.items()
-              if name not in reg.JOIN_PRODUCED]
-        )
-        rows = projected.collect()
+        Point lookup over the table's projection, built once — Catalyst
+        pushes the path predicate below the Project into the scan."""
+        projected = self._piece("dump", self._dump_projection)
+        rows = projected.filter(F.col("path") == path).collect()
         return rows[0].asDict() if rows else {}
 
     def info(self) -> dict:

@@ -18,7 +18,7 @@ pointers, so both become **path-prefix joins**:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -139,17 +139,27 @@ def registered_directory_stats(inodes: DataFrame, directories: list[str]) -> Dat
     )
 
 
-def content_summary(inodes: DataFrame, path: str) -> DataFrame:
+def content_summary_sums() -> list[Column]:
+    """The four /contentSummary aggregates; no request parameter changes
+    them, so a server builds them once per table."""
+    is_file = F.col("type") == "file"
+    return [
+        F.sum(F.when(is_file, 1).otherwise(0)).alias("fileCount"),
+        F.sum(F.when(F.col("type") == "dir", 1).otherwise(0)).alias("dirCount"),
+        F.sum(F.when(is_file, F.col("fileSize")).otherwise(0)).alias("length"),
+        F.sum(
+            F.when(is_file, F.col("fileSize") * F.col("fileReplica")).otherwise(0)
+        ).alias("spaceConsumed"),
+    ]
+
+
+def content_summary(
+    inodes: DataFrame, path: str, sums: list[Column] | None = None
+) -> DataFrame:
     """/contentSummary analog: file/dir/byte counts for one subtree
     (NamenodeAnalyticsMethods.java:2011-2059). A single filtered aggregate —
-    the `path LIKE 'p%'` predicate pushes into the Parquet scan."""
+    the `path LIKE 'p%'` predicate pushes into the Parquet scan. ``sums``
+    are prebuilt ``content_summary_sums()``."""
     prefix = path.rstrip("/")
     in_subtree = (F.col("path") == (prefix or "/")) | F.col("path").startswith(prefix + "/")
-    return inodes.filter(in_subtree).agg(
-        F.sum(F.when(F.col("type") == "file", 1).otherwise(0)).alias("fileCount"),
-        F.sum(F.when(F.col("type") == "dir", 1).otherwise(0)).alias("dirCount"),
-        F.sum(F.when(F.col("type") == "file", F.col("fileSize")).otherwise(0)).alias("length"),
-        F.sum(
-            F.when(F.col("type") == "file", F.col("fileSize") * F.col("fileReplica")).otherwise(0)
-        ).alias("spaceConsumed"),
-    )
+    return inodes.filter(in_subtree).agg(*(sums or content_summary_sums()))

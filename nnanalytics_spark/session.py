@@ -12,6 +12,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _default_driver_mem() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: 12g, capped
+    at 40% of physical memory in whole GiB (at least 1g). The heap is
+    pre-touched at start-up (below), so a fixed 12g claimed about 14 GB
+    of resident memory before the first query and got the test JVM
+    killed by the OOM killer on a 16 GB host."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(12, int(phys * 0.4) // 2**30))}g"
+
+
+_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
+
 _DEFAULTS = {
     # ~cores for local; on a real cluster this would be sized to data volume
     # (AQE coalescing makes an over-estimate cheap).
@@ -45,7 +58,7 @@ _DEFAULTS = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"),
+    "spark.driver.memory": _DRIVER_MEM,
     # Whole-stage codegen emits one compiled class per plan; a long-lived
     # session running hundreds of distinct plans (the bench's warmup +
     # measured passes, or a real analytics server) exhausts the JVM's
@@ -72,7 +85,8 @@ _DEFAULTS = {
     # this host), so first-touch cost moves wholly into untimed session
     # init and no timed query ever faults fresh heap.
     # Heap sizing: the full 59-query bench peaks under 6 GB of live heap
-    # at sf0.1; 12 GB leaves headroom and stays cheap to fault in.
+    # at sf0.1; 12 GB leaves headroom and stays cheap to fault in (smaller
+    # hosts get 40% of their memory, _default_driver_mem).
     # 2g since the headline surface passed ~200 distinct plans × 3
     # passes (1g was sized at ~60-180 plans); env-tunable for hosts
     # where the extra committed code heap matters.
@@ -80,7 +94,7 @@ _DEFAULTS = {
         "-XX:ReservedCodeCacheSize="
         + os.environ.get("SPARK_GRAFT_CODE_CACHE", "2g")
         + " -XX:+UseCodeCacheFlushing -XX:+AlwaysPreTouch -Xms"
-        + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g")
+        + _DRIVER_MEM
     ),
     # Python-worker allocator retention — the worker-side counterpart of
     # the JVM's AlwaysPreTouch (r10-opt). Spark reuses Python workers
@@ -133,6 +147,16 @@ _DEFAULTS = {
     "spark.sql.streaming.noDataMicroBatches.enabled": os.environ.get(
         "SPARK_GRAFT_STREAM_NODATA_BATCHES", "false"
     ),
+    # PySpark call-site capture off. When on, every Column / functions
+    # call goes through pyspark.errors.utils._with_origin, which walks
+    # the Python stack and makes 4-8 extra py4j round trips (active
+    # session, spark.sql.stackTracesInDataFrameContext,
+    # PySparkCurrentOrigin set and clear) before doing its work: a /dump
+    # request built its 32-column projection in 2,287 round trips. What
+    # is lost is only the Python file:line "DataFrame query context"
+    # appended to analysis-error text; exception classes and messages
+    # are unchanged. Not env-tunable: nothing here reads that context.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -87,6 +87,7 @@ class ChangeLogTailer:
     def __init__(self, spark: SparkSession, base: DataFrame, changelog_dir: str, schema):
         self.spark = spark
         self.current = base
+        self._partitions = max(1, base.rdd.getNumPartitions())
         self._stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 16)
@@ -96,8 +97,12 @@ class ChangeLogTailer:
 
     def _apply(self, batch: DataFrame, _epoch: int) -> None:
         # fold the micro-batch into the snapshot; localCheckpoint truncates
-        # the growing logical plan so repeated folds don't re-run history
-        self.current = apply_changelog_batch(self.current, batch).localCheckpoint(eager=True)
+        # the growing logical plan so repeated folds don't re-run history.
+        # The union adds the batch's partitions to the snapshot's, so the
+        # fold is coalesced (narrow, no shuffle) back to the base's count:
+        # otherwise every fold adds a partition, and a task, to each read
+        folded = apply_changelog_batch(self.current, batch).coalesce(self._partitions)
+        self.current = folded.localCheckpoint(eager=True)
 
     def start(self):
         self._query = (

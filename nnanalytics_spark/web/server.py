@@ -40,6 +40,7 @@ QueryGuard fair pools for admission control at scale.
 from __future__ import annotations
 
 import json
+import os
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlsplit
@@ -131,6 +132,7 @@ class AnalyticsWebServer:
         self.mail_transport = mail_transport
         self.max_dump_rows = max_dump_rows
         self.usage = UsageTracker()
+        self._sweep_meta = None  # ((path, inode, mtime), sweepTs) of the last read
         self._address = (host, port)
         self._httpd: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
@@ -273,6 +275,7 @@ class AnalyticsWebServer:
             if self.snapshot is None:
                 raise ValueError("no refreshable snapshot configured")
             self.snapshot.refresh()
+            # the engine drops its per-table plan pieces on reassignment
             self.engine.inodes = self.snapshot.df
             return 200, "application/json", json.dumps({"version": self.snapshot.version})
         if endpoint == "sql":
@@ -354,8 +357,6 @@ class AnalyticsWebServer:
                 }
             )
         if endpoint == "system":
-            import os
-
             vm = {}
             try:
                 with open("/proc/meminfo") as fh:
@@ -414,7 +415,6 @@ class AnalyticsWebServer:
         now = self.now_ms or _wall_ms()
         cutoff = now - limit_days * 86_400_000
         hist_dir = f"{self.suggestions_dir}/history"
-        import os
         import shutil
 
         if not os.path.isdir(hist_dir):
@@ -580,8 +580,6 @@ class AnalyticsWebServer:
         ``None`` (→ live recomputation) instead of silently-stale
         buckets. Sweeps written before the sweepMeta marker existed are
         treated as stale for the same reason."""
-        import os
-
         if not self.suggestions_dir:
             return None
         path = f"{self.suggestions_dir}/{name}"
@@ -594,14 +592,20 @@ class AnalyticsWebServer:
         return self.engine.inodes.sparkSession.read.parquet(path)
 
     def _sweep_ts(self):
-        """Sweep-time ``now`` recorded by run_sweep, or None."""
-        import os
-
+        """Sweep-time ``now`` recorded by run_sweep, or None. Read once
+        per sweep: the value is cached on the sweepMeta directory's inode
+        and mtime, which a new sweep's overwrite changes."""
         path = f"{self.suggestions_dir}/sweepMeta"
-        if not os.path.isdir(path):
+        try:
+            st = os.stat(path)
+        except FileNotFoundError:
             return None
-        rows = self.engine.inodes.sparkSession.read.parquet(path).collect()
-        return rows[0]["sweepTs"] if rows else None
+        key = (path, st.st_ino, st.st_mtime_ns)
+        cached = self._sweep_meta
+        if cached is None or cached[0] != key:
+            rows = self.engine.inodes.sparkSession.read.parquet(path).collect()
+            cached = self._sweep_meta = (key, rows[0]["sweepTs"] if rows else None)
+        return cached[1]
 
     def _suggestion(self, endpoint, params):
         now = self.now_ms

@@ -134,6 +134,32 @@ def test_changelog_tailer_update_seen(spark, tmp_path):
         tailer.stop()
 
 
+def test_changelog_tailer_fold_keeps_partition_count(spark, tmp_path):
+    """Each fold unions the batch's adds onto the snapshot; the tailer
+    coalesces back to the base's partition count, so five folds leave
+    the snapshot as wide as the base, with apply_changelog_batch's rows."""
+    from pyspark.sql import types as T
+
+    log_dir = str(tmp_path / "changelog")
+    log_schema = T.StructType(fixture.SCHEMA.fields + [T.StructField("op", T.StringType(), False)])
+    spark.createDataFrame([], log_schema).write.parquet(log_dir)
+    base_pdf = fixture.generate_pandas(levels=1, dirs_per_level=2, files_per_dir=10)
+    base = spark.createDataFrame(base_pdf, schema=fixture.SCHEMA).repartition(3)
+    tailer = refresh.ChangeLogTailer(spark, base, log_dir, log_schema)
+    expected = base
+    for k in range(5):
+        add = _new_files_pdf(start_id=300_000 + 10 * k, n=4)
+        add["op"] = "add"
+        dele = base_pdf[base_pdf.type == "file"].iloc[[k]].copy()
+        dele["op"] = "delete"
+        batch = spark.createDataFrame(pd.concat([add, dele]), schema=log_schema)
+        tailer._apply(batch, k)
+        expected = refresh.apply_changelog_batch(expected, batch)
+        assert tailer.current.rdd.getNumPartitions() == 3
+    assert sorted(tailer.current.collect()) == sorted(expected.collect())
+    assert _count_files(tailer.current) == (base_pdf.type == "file").sum() + 5 * 4 - 5
+
+
 def test_stateful_sessionization_matches_batch(spark, tmp_path):
     """applyInPandasWithState sessionization == batch lag+cumsum
     sessionization on the same events, across micro-batches with

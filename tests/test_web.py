@@ -330,6 +330,61 @@ def test_refresh_endpoint_swaps_snapshot(spark, tmp_path):
         srv.stop()
 
 
+def test_refresh_rebuilds_request_plans(spark, tmp_path):
+    """/dump and /contentSummary reuse plan pieces built per table; after
+    /refresh they must answer from the new table, not the old plans."""
+    from nnanalytics_spark.inode.engine import INodeEngine
+    from nnanalytics_spark.streaming.refresh import SnapshotTable
+
+    table_dir = str(tmp_path / "inodes")
+    pdf = fixture.generate_pandas(levels=1, dirs_per_level=2, files_per_dir=5)
+    spark.createDataFrame(pdf, schema=fixture.SCHEMA).write.parquet(table_dir)
+    snap = SnapshotTable(spark, lambda s: s.read.parquet(table_dir))
+    srv = AnalyticsWebServer(INodeEngine(snap.df), snapshot=snap, now_ms=NOW)
+    addr = ("127.0.0.1", srv.start())
+    try:
+        # first requests build the pieces over the old table
+        assert json.loads(get(addr, "/dump?path=/fresh/f0")[2]) == {}
+        summary = json.loads(get(addr, "/contentSummary?path=/")[2])
+        add = fixture.generate_pandas(levels=1, dirs_per_level=1, files_per_dir=4)
+        newf = add[add.type == "file"].copy()
+        newf["id"] = range(900_000, 900_000 + len(newf))
+        newf["path"] = [f"/fresh/f{i}" for i in range(len(newf))]
+        spark.createDataFrame(newf, schema=fixture.SCHEMA).write.mode("append").parquet(table_dir)
+        assert get(addr, "/refresh")[0] == 200
+        assert json.loads(get(addr, "/dump?path=/fresh/f0")[2])["id"] == 900_000
+        after = json.loads(get(addr, "/contentSummary?path=/")[2])
+        assert after["fileCount"] == summary["fileCount"] + 4
+    finally:
+        srv.stop()
+
+
+def test_sweep_ts_read_once_per_sweep(spark, engine, tmp_path, monkeypatch):
+    """The sweep marker is read once per sweep, not once per request; a
+    rewritten marker is seen at the next request."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from nnanalytics_spark.core.smalldf import local_df
+    from nnanalytics_spark.inode import suggestions
+
+    sweep_dir = str(tmp_path / "sweeps")
+    suggestions.run_sweep(engine.inodes, NOW, output_dir=sweep_dir)
+    reads = []
+    parquet = DataFrameReader.parquet
+    monkeypatch.setattr(
+        DataFrameReader, "parquet", lambda self, *p, **kw: reads.append(p) or parquet(self, *p, **kw)
+    )
+    srv = AnalyticsWebServer(engine, now_ms=NOW, suggestions_dir=sweep_dir)
+    assert srv._sweep_ts() == NOW
+    assert srv._sweep_ts() == NOW
+    assert len([p for p in reads if p[0].endswith("sweepMeta")]) == 1
+    local_df(spark, [(NOW + 5,)], "sweepTs long").write.mode("overwrite").parquet(
+        f"{sweep_dir}/sweepMeta"
+    )
+    assert srv._sweep_ts() == NOW + 5
+    assert len([p for p in reads if p[0].endswith("sweepMeta")]) == 2
+
+
 def test_threads_system_config_endpoints(server):
     """Ops-surface tail (/threads /system /config): JSON shape goldens
     against the live session — the reference's thread dump / system
