@@ -65,11 +65,12 @@ def sort_by_value(df: DataFrame, value_col: str, ascending: bool) -> DataFrame:
 def _bin_dimension(spark: SparkSession, key_col: str, labels: tuple[str, ...]) -> DataFrame:
     """(__ord, key_col) frame of canonical bin labels, built once per
     (session, key, labels) — every time histogram reuses it. Built
-    JVM-side (range + array literal): a createDataFrame(list) would
-    route through a Python RDD and pay ~2 s of Python-worker startup for
-    24 rows."""
+    JVM-side (range + array literal) as ONE partition: a
+    createDataFrame(list) would route through a Python RDD and pay ~2 s
+    of Python-worker startup for 24 rows, and a one-slice range reports
+    SinglePartition, so it joins a one-partition aggregate in place."""
     array = F.array(*[F.lit(k) for k in labels])
-    return spark.range(len(labels)).select(
+    return spark.range(0, len(labels), 1, 1).select(
         F.col("id").cast("int").alias("__ord"),
         F.element_at(array, F.col("id").cast("int") + 1).alias(key_col),
     )
@@ -80,11 +81,16 @@ def order_by_key_order(
 ) -> DataFrame:
     """Reindex to a canonical bin order, zero-filling missing bins
     (Histograms.orderByKeyOrder, queries/Histograms.java:226-232, applied at
-    HistogramInvoker.java:142-148). Implemented as a broadcast join against
-    the tiny bin-dimension frame + coalesce(value, 0)."""
+    HistogramInvoker.java:142-148): the one-partition bin-dimension frame
+    left-joined to the aggregate + coalesce(value, 0), sorted by bin
+    ordinal.
+
+    The aggregate (at most one row per bin) is coalesced to one
+    partition and joined by shuffled hash, not broadcast: both sides are
+    then SinglePartition, so the join and the sort run inside the
+    aggregate's own final task — no broadcast job, no range-partition
+    sampling job, no exchange after the aggregate's own."""
     bins = _bin_dimension(df.sparkSession, key_col, tuple(canonical_keys))
-    # broadcast the aggregated (small) side: a left join can only build its
-    # right side, so hinting the bin dimension would be ignored
-    out = bins.join(F.broadcast(df), key_col, "left")
+    out = bins.join(df.coalesce(1).hint("shuffle_hash"), key_col, "left")
     filled = [F.coalesce(F.col(c), F.lit(0)).alias(c) for c in value_cols]
     return out.orderBy("__ord").select(key_col, *filled)

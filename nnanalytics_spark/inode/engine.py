@@ -37,9 +37,10 @@ class INodeEngine:
     """Query surface over one inode DataFrame (stored schema, fixture.py).
 
     Plan pieces that no request parameter changes (the /dump projection,
-    the /contentSummary sums) are built once per table, on first use, and
-    dropped when ``inodes`` is reassigned (/refresh), so a new table is
-    never served through plans built over the old one."""
+    the /contentSummary sums, registry columns and histogram keys, the
+    /info counts) are built once per table, on first use, and dropped
+    when ``inodes`` is reassigned (/refresh), so a new table is never
+    served through plans built over the old one."""
 
     def __init__(self, inodes: DataFrame):
         self.inodes = inodes
@@ -63,29 +64,40 @@ class INodeEngine:
         return pieces[name]
 
     # ------------------------------------------------------------- helpers
-    def _base(self, query: Query) -> DataFrame:
-        """Select the INode set (AbstractQueryEngine.getINodeSet) and attach
-        join-produced columns only when the query touches them."""
+    @staticmethod
+    def _set_predicate(inode_set: str) -> Column | None:
+        """The INode set (AbstractQueryEngine.getINodeSet) as a predicate;
+        None for ``all``."""
+        if inode_set == "files":
+            return F.col("type") == "file"
+        if inode_set == "dirs":
+            return F.col("type") == "dir"
+        return None
+
+    def _base(self, *queries: Query) -> DataFrame:
+        """Attach join-produced columns only when one of ``queries``
+        touches them, and select their INode set when they share one."""
         df = self.inodes
-        touched = {f for f, _, _ in query.filters} | set(query.sums)
-        touched |= {query.type, query.type2} - {None}
+        touched: set = set()
+        for q in queries:
+            touched |= {f for f, _, _ in q.filters} | set(q.sums)
+            touched |= {q.type, q.type2} - {None}
         if touched & {"dirSubTreeSize", "dirSubTreeNumFiles", "dirSubTreeNumDirs"}:
             df = subtree.with_subtree_aggregates(df)
         if touched & {"isUnderNsQuota", "isUnderDsQuota"}:
             df = subtree.with_quota_flags(df)
-        if query.set == "files":
-            df = df.filter(F.col("type") == "file")
-        elif query.set == "dirs":
-            df = df.filter(F.col("type") == "dir")
-        return df
+        sets = {q.set for q in queries}
+        in_set = self._set_predicate(sets.pop()) if len(sets) == 1 else None
+        return df.filter(in_set) if in_set is not None else df
 
     def _column(self, df: DataFrame, name: str, query: Query) -> Column:
-        """Resolve a registry column, applying transforms (§2.6) if set."""
+        """Resolve a registry column, applying transforms (§2.6) if set.
+        Registry expressions name stored columns and never bind to a
+        frame, so an untransformed one is built once per table."""
         spec = reg.COLUMNS[name]
-        expr = spec.expr(df)
         if query.transforms or query.transform_outputs:
-            expr = self._apply_transform(df, name, expr, query)
-        return expr
+            return self._apply_transform(df, name, spec.expr(df), query)
+        return self._piece(("column", name), lambda: spec.expr(df))
 
     def _apply_transform(
         self, df: DataFrame, name: str, expr: Column, query: Query
@@ -123,7 +135,8 @@ class INodeEngine:
                 expr = F.when(cond, F.col("fileSize") * replacement).otherwise(expr)
         return expr
 
-    def _filtered(self, query: Query) -> DataFrame:
+    @staticmethod
+    def _validate(query: Query) -> None:
         reg.validate_query(
             query.set,
             query.filters,
@@ -131,14 +144,22 @@ class INodeEngine:
             query.sums,
             [f.split(":", 1)[1] for f in query.finds if ":" in f],
         )
-        df = self._base(query)
+
+    def _predicate(self, df: DataFrame, query: Query, with_set: bool = False) -> Column | None:
+        """AND of the query's filters, and of its set ``with_set``, or None."""
         predicates = [
             flt.compile_predicate(
                 self._column(df, field, query), reg.COLUMNS[field].dtype, op, value, query.now_ms
             )
             for field, op, value in query.filters
         ]
-        chained = flt.and_chain(predicates)
+        in_set = self._set_predicate(query.set) if with_set else None
+        return flt.and_chain(predicates if in_set is None else [in_set, *predicates])
+
+    def _filtered(self, query: Query) -> DataFrame:
+        self._validate(query)
+        df = self._base(query)
+        chained = self._predicate(df, query)
         return df.filter(chained) if chained is not None else df
 
     def _sum_exprs(self, df: DataFrame, query: Query) -> list[Column]:
@@ -202,10 +223,28 @@ class INodeEngine:
 
     def divide(self, q1: Query, q2: Query) -> DataFrame:
         """/divide: sum(query1) / sum(query2)
-        (NamenodeAnalyticsMethods.java:1310-1393)."""
-        a = self.filter_sum(q1).select(F.col(q1.sums[0]).cast("double").alias("__a"))
-        b = self.filter_sum(q2).select(F.col(q2.sums[0]).cast("double").alias("__b"))
-        return a.crossJoin(b).select((F.col("__a") / F.col("__b")).alias("ratio"))
+        (NamenodeAnalyticsMethods.java:1310-1393), both sums in ONE
+        aggregate over one scan. Each side is a conditional aggregate:
+        its own set (unless the two share one, which then filters the
+        scan) AND its own filters, its columns transformed by its own
+        transforms. A side no row satisfies sums to null, or counts 0,
+        as a filtered aggregate would."""
+        for q in (q1, q2):
+            self._validate(q)
+        df = self._base(q1, q2)
+        shared = q1.set == q2.set
+        a, b = (self._side_sum(df, q, with_set=not shared) for q in (q1, q2))
+        return df.agg((a.cast("double") / b.cast("double")).alias("ratio"))
+
+    def _side_sum(self, df: DataFrame, query: Query, with_set: bool) -> Column:
+        """``query``'s first sum over the rows of ``df`` its filters (and
+        its set, ``with_set``) select."""
+        cond = self._predicate(df, query, with_set)
+        name = query.sums[0]
+        value = F.lit(1) if name == "count" else self._column(df, name, query)
+        if cond is not None:
+            value = F.when(cond, value)
+        return F.count(value) if name == "count" else F.sum(value)
 
     def content_summary(self, path: str) -> DataFrame:
         sums = self._piece("content_summary", subtree.content_summary_sums)
@@ -229,13 +268,10 @@ class INodeEngine:
 
     def info(self) -> dict:
         """/info + /loadingStatus analog (Constants.java:298-362 admin
-        surface): namespace shape + engine facts in one shared scan —
+        surface): namespace shape, counted once per table, + engine facts —
         where the reference reports NameNode loader state, we report the
         loaded table and the Spark session serving it."""
-        by = {
-            r["type"]: r["count"]
-            for r in self.inodes.groupBy("type").count().collect()
-        }
+        by = self._piece("type_counts", self._type_counts)
         spark = self.inodes.sparkSession
         return {
             "sparkVersion": spark.version,
@@ -244,6 +280,9 @@ class INodeEngine:
             "numTotal": int(sum(by.values())),
             "columns": sorted(reg.COLUMNS),
         }
+
+    def _type_counts(self) -> dict:
+        return {r["type"]: r["count"] for r in self.inodes.groupBy("type").count().collect()}
 
     def metrics(self) -> dict:
         """/metrics + /threads analog: scheduler/executor counters from the
@@ -258,18 +297,27 @@ class INodeEngine:
 
     # ------------------------------------------------------------ grouping
     def _group_key(self, df: DataFrame, type_name: str, query: Query) -> Column:
-        """Histogram key expression (§2.4 dimension binning)."""
-        now = query.now_ms
+        """Histogram key expression (§2.4 dimension binning). A key no
+        request parameter changes is built once per table; time buckets
+        (relative to the request's ``now``), parentDir (its depth) and
+        keys over transformed columns are built per request."""
+        if type_name in ("accessTime", "modTime"):
+            return bins.time_bucket(F.col(type_name), query.time_range, query.now_ms)
+        if type_name == "parentDir":
+            return self.parent_dir_at_depth(F.col("path"), query.parent_dir_depth)
+        if query.transforms or query.transform_outputs:
+            return self._key(df, type_name, query)
+        return self._piece(("key", type_name), lambda: self._key(df, type_name, query))
+
+    def _key(self, df: DataFrame, type_name: str, query: Query) -> Column:
         if type_name in ("user", "group", "name", "path"):
             return F.col(type_name)
-        if type_name in ("accessTime", "modTime"):
-            return bins.time_bucket(F.col(type_name), query.time_range, now)
         if type_name in ("modDate", "accessDate"):
-            return reg.COLUMNS[type_name].expr(df)
+            return self._column(df, type_name, query)
         if type_name in ("fileSize", "diskspaceConsumed"):
             return bins.space_bucket(self._column(df, type_name, query))
         if type_name == "memoryConsumed":
-            return bins.memory_bucket(reg.COLUMNS["memoryConsumed"].expr(df))
+            return bins.memory_bucket(self._column(df, "memoryConsumed", query))
         if type_name == "fileReplica":
             # EC-policied files bin under the policy name instead of the
             # replication factor (VersionContext.java:206-219); the default
@@ -280,8 +328,6 @@ class INodeEngine:
             return bins.storage_type_bucket(F.col("storagePolicyId"))
         if type_name == "fileType":
             return bins.file_type(F.col("name"))
-        if type_name == "parentDir":
-            return self.parent_dir_at_depth(F.col("path"), query.parent_dir_depth)
         if type_name == "dirQuota":
             return F.col("path")
         raise reg.InvalidQueryError(f"unknown histogram type: {type_name!r}")
@@ -289,13 +335,16 @@ class INodeEngine:
     @staticmethod
     def parent_dir_at_depth(path_col: Column, depth: int) -> Column:
         """Ancestor directory at the requested depth, else NO_MAPPING
-        (Helper.getDirectoryAtDepthFunction, analytics/Helper.java:288-304)."""
-        parts = F.split(path_col, "/")
-        # parent must sit at >= depth (Path.depth of '/a/b' is 2); the
-        # ancestor AT `depth` is the first `depth` components re-joined.
-        deep_enough = (F.size(parts) - 2) >= depth
-        prefix = F.concat_ws("/", F.slice(parts, 1, depth + 1))
-        return F.when(deep_enough, prefix).otherwise(F.lit("NO_MAPPING"))
+        (Helper.getDirectoryAtDepthFunction, analytics/Helper.java:288-304).
+
+        The ancestor AT ``depth`` is everything before the path's
+        (depth+1)-th '/'. A path with fewer slashes sits above ``depth``
+        (Path.depth of '/a/b' is 2, its parent's 1): substring_index then
+        returns the whole path, so the prefix is kept only when shorter."""
+        prefix = F.substring_index(path_col, "/", depth + 1)
+        return F.when(F.length(prefix) < F.length(path_col), prefix).otherwise(
+            F.lit("NO_MAPPING")
+        )
 
     # --------------------------------------------------------- post-ops
     def _post_process(self, out: DataFrame, query: Query) -> DataFrame:

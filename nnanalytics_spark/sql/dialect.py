@@ -16,9 +16,9 @@ Faithful quirks (TestSQL.java:42-194 is the golden contract):
   becomes the value sort.
 - `SET parentDirDepth|timeRange = v` session knobs (SqlParser.java:67-86).
 
-Beyond the dialect, ``register_views`` exposes the inode table as real
-Spark SQL temp views (files/dirs/all) — the full Spark SQL language then
-works as a superset, which is the Spark-native answer to /sql.
+Full Spark SQL over the inode table needs no code here: a temp view of
+the served DataFrame (``createOrReplaceTempView``) takes any statement
+``spark.sql`` accepts.
 """
 
 from __future__ import annotations
@@ -285,12 +285,3 @@ def execute_statements(text: str, engine) -> DataFrame | list:
         result = execute(statement, engine, session)
     return result
 
-
-def register_views(spark, inodes: DataFrame) -> None:
-    """Expose files/dirs/all as Spark temp views — native Spark SQL becomes
-    a strict superset of the reference dialect."""
-    from pyspark.sql import functions as F
-
-    inodes.createOrReplaceTempView("all_inodes")
-    inodes.filter(F.col("type") == "file").createOrReplaceTempView("files")
-    inodes.filter(F.col("type") == "dir").createOrReplaceTempView("dirs")

@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import json
 import os
+import stat
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlsplit
@@ -132,7 +133,7 @@ class AnalyticsWebServer:
         self.mail_transport = mail_transport
         self.max_dump_rows = max_dump_rows
         self.usage = UsageTracker()
-        self._sweep_meta = None  # ((path, inode, mtime), sweepTs) of the last read
+        self._sweep_held: dict = {}  # report name → ((path, inode, mtime), value) of the last read
         self._address = (host, port)
         self._httpd: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
@@ -403,7 +404,10 @@ class AnalyticsWebServer:
             if name in self.cached_queries.names():
                 self.cached_queries.unregister(name)
                 return 200, "text/plain", f"Dropped cached query {name}."
-            if spark.catalog.dropTempView(name):
+            # the session catalog drops the name only: Catalog.dropTempView
+            # would also uncache every plan equal to the view's, which for
+            # a view over the served table is the held namespace itself
+            if spark._jsparkSession.sessionState().catalog().dropTempView(name):
                 return 200, "text/plain", f"Dropped view {name}."
             raise KeyError(f"no cached query or view named {name!r}")
         # truncate: rewrite the sweep-history archive keeping `limit` days
@@ -568,11 +572,13 @@ class AnalyticsWebServer:
     SWEEP_TTL_MS = 15 * 60 * 1000
 
     def _sweep_cache(self, name, now_ms=None):
-        """Read a sweep-cached report (run_sweep's parquet) when a
+        """A sweep-cached report (run_sweep's parquet) when a
         suggestions_dir is configured and holds a FRESH one — the
         reference serves these endpoints from its 15-minute
         SuggestionsEngine cache; recomputing the full battery per
         dashboard poll would pay a complete table scan per request.
+        The report's DataFrame is built once per sweep (``_sweep_read``),
+        so a request runs the report's scan alone, with no schema job.
 
         Freshness: time-relative reports (fileAge, the per-age scalar
         buckets) were computed against the sweep-time ``now``, so a
@@ -582,30 +588,38 @@ class AnalyticsWebServer:
         treated as stale for the same reason."""
         if not self.suggestions_dir:
             return None
-        path = f"{self.suggestions_dir}/{name}"
-        if not os.path.isdir(path):
-            return None
         if now_ms is not None:
             sweep_ts = self._sweep_ts()
             if sweep_ts is None or abs(now_ms - sweep_ts) > self.SWEEP_TTL_MS:
                 return None
-        return self.engine.inodes.sparkSession.read.parquet(path)
+        return self._sweep_read(name, self.engine.inodes.sparkSession.read.parquet)
 
     def _sweep_ts(self):
-        """Sweep-time ``now`` recorded by run_sweep, or None. Read once
-        per sweep: the value is cached on the sweepMeta directory's inode
-        and mtime, which a new sweep's overwrite changes."""
-        path = f"{self.suggestions_dir}/sweepMeta"
+        """Sweep-time ``now`` recorded by run_sweep, or None."""
+
+        def first_ts(path):
+            rows = self.engine.inodes.sparkSession.read.parquet(path).collect()
+            return rows[0]["sweepTs"] if rows else None
+
+        return self._sweep_read("sweepMeta", first_ts)
+
+    def _sweep_read(self, name, load):
+        """``load(path)`` of the sweep's ``name`` directory, or None
+        without one. Read once per sweep: the value is held on the
+        directory's inode and mtime, which a new sweep's overwrite
+        changes."""
+        path = f"{self.suggestions_dir}/{name}"
         try:
             st = os.stat(path)
         except FileNotFoundError:
             return None
+        if not stat.S_ISDIR(st.st_mode):
+            return None
         key = (path, st.st_ino, st.st_mtime_ns)
-        cached = self._sweep_meta
-        if cached is None or cached[0] != key:
-            rows = self.engine.inodes.sparkSession.read.parquet(path).collect()
-            cached = self._sweep_meta = (key, rows[0]["sweepTs"] if rows else None)
-        return cached[1]
+        held = self._sweep_held.get(name)
+        if held is None or held[0] != key:
+            held = self._sweep_held[name] = (key, load(path))
+        return held[1]
 
     def _suggestion(self, endpoint, params):
         now = self.now_ms

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
+from pyspark.sql import functions as F
 
 from nnanalytics_spark.core.ir import Query
 from nnanalytics_spark.inode import fixture
@@ -100,6 +102,48 @@ def test_divide(engine, inodes_pdf):
     assert abs(ratio - (f.fileSize == 0).sum() / len(f)) < 1e-9
 
 
+_DIVIDE_SIDES = {
+    "files_count": Query(set="files", sums=["count"], now_ms=NOW),
+    "files_size": Query(set="files", sums=["fileSize"], now_ms=NOW),
+    "dirs_count": Query(set="dirs", sums=["count"], now_ms=NOW),
+    "all_count_deep": Query(set="all", filters=[("depth", "gte", "3")], sums=["count"], now_ms=NOW),
+    "empty_count": Query(set="files", filters=[("fileSize", "lt", "0")], sums=["count"], now_ms=NOW),
+    "empty_size": Query(set="files", filters=[("fileSize", "lt", "0")], sums=["fileSize"], now_ms=NOW),
+    "replica_1": Query(
+        set="files", sums=["diskspaceConsumed"], transforms=[([], "fileReplica", 1)], now_ms=NOW
+    ),
+    "diskspace": Query(set="files", sums=["diskspaceConsumed"], now_ms=NOW),
+}
+
+
+@pytest.mark.parametrize(
+    "num,den",
+    [
+        ("files_size", "files_count"),
+        ("dirs_count", "files_count"),
+        ("all_count_deep", "dirs_count"),
+        ("empty_count", "files_count"),
+        ("empty_size", "files_count"),
+        ("files_count", "empty_size"),
+        ("replica_1", "diskspace"),
+    ],
+)
+def test_divide_one_aggregate_matches_two(engine, num, den):
+    """/divide's single conditional aggregate answers what the two
+    filtered sums do: mixed sets, per-side transforms, and an empty side
+    (a null sum makes the ratio null; an empty count is 0, not null)."""
+    q1, q2 = _DIVIDE_SIDES[num], _DIVIDE_SIDES[den]
+    a = engine.filter_sum(q1).collect()[0][0]
+    b = engine.filter_sum(q2).collect()[0][0]
+    got = engine.divide(q1, q2).collect()[0][0]
+    if a is None or b is None:
+        assert got is None
+    else:
+        assert got == pytest.approx(a / b, rel=1e-12)
+    if num == "empty_count":
+        assert got == 0.0
+
+
 def test_transform_whatif_diskspace(engine, inodes_pdf):
     """Transformed diskspace (all replicas→1) must be <= raw and equal
     sum(fileSize) — the reference's own semantic test shape
@@ -138,6 +182,34 @@ def test_parent_dir_histogram(engine, inodes_pdf):
     f["p1"] = "/" + f.path.str.split("/").str[1]
     expect = f.groupby("p1").size().to_dict()
     assert got == expect
+
+
+def _split_parent_dir(path_col, depth):
+    """The earlier split/slice/concat_ws form of parent_dir_at_depth,
+    kept as the reference for the substring_index form."""
+    parts = F.split(path_col, "/")
+    deep_enough = (F.size(parts) - 2) >= depth
+    prefix = F.concat_ws("/", F.slice(parts, 1, depth + 1))
+    return F.when(deep_enough, prefix).otherwise(F.lit("NO_MAPPING"))
+
+
+def test_parent_dir_key_matches_split_form(spark, inodes):
+    from nnanalytics_spark.inode.engine import INodeEngine
+
+    edges = spark.createDataFrame(
+        [("/",), ("/a",), ("/a/b/",), ("//x",), ("/a/b/c/d/e/f",), ("",), (None,)], "path string"
+    )
+    paths = inodes.select("path").unionByName(edges)
+    for depth in range(6):
+        new = INodeEngine.parent_dir_at_depth(F.col("path"), depth)
+        old = _split_parent_dir(F.col("path"), depth)
+        rows = paths.select("path", new.alias("new"), old.alias("old")).collect()
+        assert len(rows) == inodes.count() + 7
+        bad = [r for r in rows if r["new"] != r["old"]]
+        assert not bad, (depth, bad[:5])
+        # every depth both keeps some prefixes and maps some paths away
+        assert {r["new"] for r in rows} - {"NO_MAPPING"}, depth
+        assert "NO_MAPPING" in {r["new"] for r in rows}, depth
 
 
 def test_memory_consumed_model_constant(engine, inodes_pdf):

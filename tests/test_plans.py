@@ -70,13 +70,18 @@ def test_content_summary_prefix_pushdown(stored):
     assert "StringStartsWith(path,/dir0/)" in plan or "startswith" in plan.lower()
 
 
-def test_zero_fill_join_is_broadcast(stored):
+def test_zero_fill_join_stays_in_the_aggregate_task(stored):
+    """The zero-fill joins the one-partition bin dimension to the
+    aggregate coalesced to one partition: no broadcast job, no sort-merge
+    join, and no exchange past the aggregate's own."""
     eng = INodeEngine(stored)
     q = Query(set="files", type="modTime", sums=["count"], time_range="yearly",
               now_ms=fixture.NOW_MS)
     plan = plan_of(eng.histogram(q))
-    assert "BroadcastHashJoin" in plan  # tiny aggregated side broadcast
-    assert "SortMergeJoin" not in plan
+    assert "ShuffledHashJoin" in plan, plan
+    assert "BroadcastExchange" not in plan and "SortMergeJoin" not in plan, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "rangepartitioning" not in plan, plan
 
 
 def test_whole_stage_codegen_covers_filter_agg(stored):

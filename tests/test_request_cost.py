@@ -1,13 +1,20 @@
-"""Driver-side cost of building one REST request, counted in py4j round
-trips. Every Column, DataFrame and functions call is one or more calls
-into the JVM; a request that rebuilds request-invariant plan pieces, or
-pays PySpark's call-site capture on each call, costs hundreds to
-thousands of them before Spark runs anything. The ceilings sit at about
-1.5x the counts of a warm engine (plan pieces built by a first request)."""
+"""What one REST request costs beyond its own answer.
+
+Driver side, in py4j round trips: every Column, DataFrame and functions
+call is one or more calls into the JVM; a request that rebuilds
+request-invariant plan pieces, or pays PySpark's call-site capture on
+each call, costs hundreds to thousands of them before Spark runs
+anything. The ceilings sit at about 1.5x the counts of a warm engine
+(plan pieces built by a first request).
+
+Spark side, in jobs: each job pays scheduling, task launch and, on a
+one-partition held table, a full pass over it, so a request class runs
+at most one."""
 
 from __future__ import annotations
 
 import threading
+from urllib.parse import quote
 
 import pytest
 from py4j.clientserver import ClientServerConnection
@@ -31,18 +38,18 @@ def _url(url):
 
 
 # (request class, build one request, ceiling); counts at the time of
-# writing: 37 36 40 85 122 83 32 37 86 23 12
+# writing: 31 30 37 26 125 62 26 31 29 23 12
 CASES = [
     ("filter_sum", _url("/filter?set=files&filters=user:eq:hdfs,fileSize:gt:10&sum=count"), 56),
     ("filter_find", _url("/filter?set=files&filters=user:eq:hdfs&find=max:fileSize"), 54),
     ("histogram_user_top", _url("/histogram?set=files&type=user&sum=count&top=5"), 60),
-    ("histogram_fileSize", _url("/histogram?set=files&type=fileSize&sum=count"), 128),
+    ("histogram_fileSize", _url("/histogram?set=files&type=fileSize&sum=count"), 39),
     ("histogram_modTime", _url("/histogram?set=files&type=modTime&timeRange=monthly&sum=count"), 183),
     ("histogram_parentDir",
-     _url("/histogram?set=files&type=parentDir&parentDirDepth=2&sum=count&top=10"), 125),
+     _url("/histogram?set=files&type=parentDir&parentDirDepth=2&sum=count&top=10"), 93),
     ("histogram2", _url("/histogram2?set=files&type=user,group&sum=count"), 48),
     ("histogram3", _url("/histogram3?set=files&type=user&sum=count,fileSize"), 56),
-    ("divide", _url("/divide?set1=files&filters1=user:eq:hdfs&sum1=fileSize&set2=files&sum2=fileSize"), 129),
+    ("divide", _url("/divide?set1=files&filters1=user:eq:hdfs&sum1=fileSize&set2=files&sum2=fileSize"), 44),
     ("content_summary", lambda eng, path: eng.content_summary("/dir0"), 35),
     # /dump builds AND collects: its count includes the collect
     ("dump", lambda eng, path: eng.dump_inode(path), 18),
@@ -102,3 +109,92 @@ def test_dump_path_predicate_reaches_cached_scan(spark, inodes_pdf, monkeypatch)
         assert collected[0].filter(F.col("path") != path).count() == 0
     finally:
         inodes.unpersist()
+
+
+# the perfbench rest_point request classes, over the fixture namespace
+def _point_urls(pdf):
+    user = "hdfs"
+    sql = lambda stmt: "/sql?sqlStatement=" + quote(stmt)  # noqa: E731
+    return {
+        "filter_sum": f"/filter?set=files&filters=user:eq:{user},fileSize:gt:1024&sum=count",
+        "filter_find": f"/filter?set=files&filters=user:eq:{user}&find=max:fileSize",
+        "histogram_user": "/histogram?set=files&type=user&sum=count&top=5",
+        "histogram_fileType": "/histogram?set=files&type=fileType&sum=count",
+        "histogram_fileSize": "/histogram?set=files&type=fileSize&sum=count",
+        "histogram_modTime": "/histogram?set=files&type=modTime&timeRange=monthly&sum=count",
+        "histogram_parentDir": "/histogram?set=files&type=parentDir&parentDirDepth=2&sum=count&top=10",
+        "histogram2": "/histogram2?set=files&type=user,group&sum=count",
+        "histogram3": "/histogram3?set=files&type=user&sum=count,fileSize",
+        "divide": f"/divide?set1=files&filters1=user:eq:{user}&sum1=fileSize&set2=files&sum2=fileSize",
+        "sql_count": sql(f"SELECT COUNT(*) FROM files WHERE fileSize > 1024 AND user = '{user}'"),
+        "sql_group": sql("SELECT user, COUNT(*) FROM files GROUP BY user"),
+        "dump": "/dump?path=" + quote(pdf[pdf.type == "file"].path.iloc[5]),
+        "content_summary": "/contentSummary?path=/dir0",
+        "fileAge": "/fileAge",
+        "top": "/top?metric=numFiles&limit=5",
+        "info": "/info",
+    }
+
+
+#: jobs per request class on a split parquet scan, before the zero-fill,
+#: /divide, sweep-report and /info rewrites; a class may not run more
+SPLIT_SCAN_JOBS = {
+    "filter_sum": 2, "filter_find": 1, "histogram_user": 2, "histogram_fileType": 2,
+    "histogram_fileSize": 2, "histogram_modTime": 5, "histogram_parentDir": 2,
+    "histogram2": 2, "histogram3": 2, "divide": 4, "sql_count": 2, "sql_group": 2,
+    "dump": 1, "content_summary": 2, "fileAge": 2, "top": 2, "info": 2,
+}
+
+
+def _jobs_per_request(spark, source, sweep_dir, urls) -> dict:
+    """Jobs each warm request runs, counted through its job group."""
+    from nnanalytics_spark import __main__ as cli
+    from nnanalytics_spark.web.server import AnalyticsWebServer
+
+    inodes = cli._load_inodes(spark, source, "parquet")
+    srv = AnalyticsWebServer(INodeEngine(inodes), now_ms=NOW, suggestions_dir=sweep_dir)
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for name, url in urls.items():
+            path, _, query = url.partition("?")
+            assert srv.handle("GET", path, query, "", "tests")[0] == 200, name
+            group = f"request-cost-{name}-{id(srv)}"
+            sc.setJobGroup(group, name)
+            try:
+                assert srv.handle("GET", path, query, "", "tests")[0] == 200, name
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        inodes.unpersist()
+    return jobs
+
+
+def test_one_job_per_request(spark, inodes_pdf, tmp_path_factory):
+    from nnanalytics_spark.inode import suggestions
+    from nnanalytics_spark.sources import layout
+
+    root = tmp_path_factory.mktemp("request_jobs")
+    source, sweep_dir = str(root / "layout"), str(root / "sweep")
+    table = spark.createDataFrame(inodes_pdf, schema=fixture.SCHEMA)
+    layout.write_inode_table(table, source, 2)
+    suggestions.run_sweep(spark.read.parquet(source), NOW, output_dir=sweep_dir)
+    urls = _point_urls(inodes_pdf)
+
+    held = _jobs_per_request(spark, source, sweep_dir, urls)
+    # a warm /info answers from the engine's per-table counts
+    ceiling = {name: 0 if name == "info" else 1 for name in urls}
+    assert {k: v for k, v in held.items() if v > ceiling[k]} == {}, held
+
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "256b")  # a split scan, as a source past the one-partition limit
+    try:
+        split = _jobs_per_request(spark, source, sweep_dir, urls)
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+    assert {k: v for k, v in split.items() if v > SPLIT_SCAN_JOBS[k]} == {}, split

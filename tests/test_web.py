@@ -385,6 +385,29 @@ def test_sweep_ts_read_once_per_sweep(spark, engine, tmp_path, monkeypatch):
     assert len([p for p in reads if p[0].endswith("sweepMeta")]) == 2
 
 
+def test_sweep_report_read_once_per_sweep(spark, engine, tmp_path, monkeypatch):
+    """A sweep-served report is read once per sweep: requests reuse its
+    DataFrame, so they run no schema job; a new sweep is seen at once."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from nnanalytics_spark.inode import suggestions
+
+    sweep_dir = str(tmp_path / "sweeps")
+    suggestions.run_sweep(engine.inodes, NOW, output_dir=sweep_dir)
+    reads = []
+    parquet = DataFrameReader.parquet
+    monkeypatch.setattr(
+        DataFrameReader, "parquet", lambda self, *p, **kw: reads.append(p) or parquet(self, *p, **kw)
+    )
+    srv = AnalyticsWebServer(engine, now_ms=NOW, suggestions_dir=sweep_dir)
+    first = [srv.handle("GET", "/fileAge", "", "", "tests") for _ in range(3)]
+    assert len([p for p in reads if p[0].endswith("/fileAge")]) == 1
+    assert first[0][0] == 200 and first[1] == first[0] == first[2]
+    suggestions.run_sweep(engine.inodes, NOW, output_dir=sweep_dir)
+    assert srv.handle("GET", "/fileAge", "", "", "tests") == first[0]
+    assert len([p for p in reads if p[0].endswith("/fileAge")]) == 2
+
+
 def test_threads_system_config_endpoints(server):
     """Ops-surface tail (/threads /system /config): JSON shape goldens
     against the live session — the reference's thread dump / system
@@ -431,15 +454,36 @@ def test_log_endpoint_tails_file(engine, tmp_path):
         srv2.stop()
 
 
-def test_drop_endpoint_removes_cached_query_and_view(server, engine):
+def test_drop_endpoint_removes_cached_query_and_view(spark, server):
     get(server, "/setCachedQuery?queryName=dropMe&set=files&sum=count")
     status, _, body = get(server, "/drop?table=dropMe")
     assert status == 200 and "dropMe" in body
     assert "dropMe" not in json.loads(get(server, "/cachedMaps")[2])
-    engine.inodes.createOrReplaceTempView("scratch_view")
+    spark.range(3).createOrReplaceTempView("scratch_view")
     status, _, body = get(server, "/drop?table=scratch_view")
     assert status == 200 and "scratch_view" in body
+    assert not spark.catalog.tableExists("scratch_view")
     assert get(server, "/drop?table=neverExisted")[0] == 400
+
+
+def test_drop_of_a_view_keeps_the_served_table_cached(spark, inodes_pdf):
+    """/drop of a view over the served table removes the name only: the
+    table stays held in memory, and requests keep scanning the cache."""
+    from nnanalytics_spark.inode.engine import INodeEngine
+
+    # a table of its own, unequal to the shared fixture's cached plan
+    table = spark.createDataFrame(inodes_pdf.iloc[:30], schema=fixture.SCHEMA).coalesce(1).persist()
+    table.count()
+    try:
+        srv = AnalyticsWebServer(INodeEngine(table), now_ms=NOW)
+        table.createOrReplaceTempView("over_served")
+        status, _, body = srv.handle("GET", "/drop", "table=over_served", "", "admin")
+        assert status == 200 and "over_served" in body
+        assert not spark.catalog.tableExists("over_served")
+        plan = srv.engine.inodes.filter("type = 'file'")._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan, plan
+    finally:
+        table.unpersist()
 
 
 def test_truncate_endpoint_prunes_history(spark, engine, tmp_path):
