@@ -32,39 +32,19 @@ class Query:
     limit: int | None = None
     parent_dir_depth: int = 3
     time_range: str = "weekly"
-    # transforms: §2.6 what-if rewrite. ``transforms`` is the canonical
-    # POSITION-ALIGNED form — one (conditions, field, output) entry per
-    # URL triple, so `user:eq:a → replica 2; user:eq:b → replica 3` keeps
-    # each condition paired with ITS output (an AND-merge of the
-    # conditions would be unsatisfiable). The two legacy fields remain
-    # for single-transform callers and are ignored when ``transforms``
-    # is non-empty.
+    # transforms: §2.6 what-if rewrite, POSITION-ALIGNED — one
+    # (conditions, field, output) entry per URL triple, so
+    # `user:eq:a → replica 2; user:eq:b → replica 3` keeps each condition
+    # paired with ITS output (an AND-merge of the conditions would be
+    # unsatisfiable).
     transforms: list[tuple[list[tuple[str, str, str]], str, int]] = field(
         default_factory=list
     )
-    transform_conditions: list[tuple[str, str, str]] = field(default_factory=list)
-    transform_outputs: dict[str, int] = field(default_factory=dict)
     now_ms: int | None = None
 
     def __post_init__(self) -> None:
         if self.now_ms is None:
             self.now_ms = int(time.time() * 1000)
-
-
-def parse_filters(filters: str, filter_ops: str) -> list[tuple[str, str, str]]:
-    """REST-style filter parsing: ``filters=f1,f2`` + ``filterOps=op:val,...``
-    → triplets (Helper.parseFilters/parseFilterOps, analytics/Helper.java:235-280)."""
-    if not filters:
-        return []
-    fields = filters.split(",")
-    ops = filter_ops.split(",") if filter_ops else []
-    if len(fields) != len(ops):
-        raise ValueError("filters and filterOps must have the same length")
-    out = []
-    for field_name, op_spec in zip(fields, ops):
-        op, _, value = op_spec.partition(":")
-        out.append((field_name.strip(), op.strip(), value))
-    return out
 
 
 def parse_filter_triplets(spec: str) -> list[tuple[str, str, str]]:

@@ -125,13 +125,7 @@ def _build_query(params: dict[str, list[str]], now_ms: int | None, *, suffix: st
         if not (len(conds) == len(fields) == len(outputs)):
             raise ValueError("transform parameter lists must be position-aligned")
         for cond, fld, out in zip(conds, fields, outputs):
-            trips = parse_filter_triplets(cond)
-            # canonical aligned form (each condition keeps ITS output)...
-            q.transforms.append((trips, fld, int(out)))
-            # ...plus the legacy single-transform mirror for callers that
-            # construct Query directly
-            q.transform_conditions.extend(trips)
-            q.transform_outputs[fld] = int(out)
+            q.transforms.append((parse_filter_triplets(cond), fld, int(out)))
     return q
 
 

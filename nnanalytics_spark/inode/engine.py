@@ -95,7 +95,7 @@ class INodeEngine:
         Registry expressions name stored columns and never bind to a
         frame, so an untransformed one is built once per table."""
         spec = reg.COLUMNS[name]
-        if query.transforms or query.transform_outputs:
+        if query.transforms:
             return self._apply_transform(df, name, spec.expr(df), query)
         return self._piece(("column", name), lambda: spec.expr(df))
 
@@ -108,13 +108,8 @@ class INodeEngine:
 
         Each transform triple keeps ITS OWN condition (position-aligned,
         `query.transforms`); overlapping conditions resolve first-triple-
-        wins via reverse-order when-chaining. The legacy AND-merged pair
-        of fields is honored only when no aligned list is present."""
-        triples = query.transforms or [
-            (query.transform_conditions, fld, out)
-            for fld, out in query.transform_outputs.items()
-        ]
-        for conds, fld, replacement in reversed(triples):
+        wins via reverse-order when-chaining."""
+        for conds, fld, replacement in reversed(query.transforms):
             if fld != "fileReplica":
                 continue
             cond = flt.and_chain(
@@ -305,7 +300,7 @@ class INodeEngine:
             return bins.time_bucket(F.col(type_name), query.time_range, query.now_ms)
         if type_name == "parentDir":
             return self.parent_dir_at_depth(F.col("path"), query.parent_dir_depth)
-        if query.transforms or query.transform_outputs:
+        if query.transforms:
             return self._key(df, type_name, query)
         return self._piece(("key", type_name), lambda: self._key(df, type_name, query))
 

@@ -47,12 +47,11 @@ _DEFAULTS = {
     # byte-bound rows. Grouped Arrow-kernel inputs, the one family
     # measured to prefer narrowness, pin their own width explicitly
     # (similarity._pin_kernel_width) so this floor cannot re-fan them.
-    # Env-tunable: at cluster scale a genuinely byte-bound deployment
-    # can restore 1m+; the floor only governs how far AQE may shrink
-    # below spark.sql.shuffle.partitions, never partition count upward.
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-        "SPARK_GRAFT_AQE_MIN_PARTITION", "64k"
-    ),
+    # A genuinely byte-bound deployment can restore 1m+ through
+    # get_spark's overrides; the floor only governs how far AQE may
+    # shrink below spark.sql.shuffle.partitions, never partition count
+    # upward.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
@@ -88,12 +87,9 @@ _DEFAULTS = {
     # at sf0.1; 12 GB leaves headroom and stays cheap to fault in (smaller
     # hosts get 40% of their memory, _default_driver_mem).
     # 2g since the headline surface passed ~200 distinct plans × 3
-    # passes (1g was sized at ~60-180 plans); env-tunable for hosts
-    # where the extra committed code heap matters.
+    # passes (1g was sized at ~60-180 plans).
     "spark.driver.extraJavaOptions": (
-        "-XX:ReservedCodeCacheSize="
-        + os.environ.get("SPARK_GRAFT_CODE_CACHE", "2g")
-        + " -XX:+UseCodeCacheFlushing -XX:+AlwaysPreTouch -Xms"
+        "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing -XX:+AlwaysPreTouch -Xms"
         + _DRIVER_MEM
     ),
     # Python-worker allocator retention — the worker-side counterpart of
@@ -119,17 +115,11 @@ _DEFAULTS = {
     # 1.85, semdedup 1.88 -> 1.75 min-of-2x2); during fault storms the
     # retained pages are the difference between ~1x and 10-28x. Cost:
     # per-worker RSS stays at its high-water mark (bounded by the
-    # largest kernel batch, ~100-300 MB here); env-tunable for
-    # memory-tight deployments.
-    "spark.executorEnv.MALLOC_TRIM_THRESHOLD_": os.environ.get(
-        "SPARK_GRAFT_WORKER_MALLOC_TRIM", "-1"
-    ),
-    "spark.executorEnv.MALLOC_MMAP_THRESHOLD_": os.environ.get(
-        "SPARK_GRAFT_WORKER_MMAP_THRESHOLD", "1073741824"
-    ),
-    "spark.executorEnv.ARROW_DEFAULT_MEMORY_POOL": os.environ.get(
-        "SPARK_GRAFT_WORKER_ARROW_POOL", "system"
-    ),
+    # largest kernel batch, ~100-300 MB here); a memory-tight
+    # deployment can pass other values through get_spark's overrides.
+    "spark.executorEnv.MALLOC_TRIM_THRESHOLD_": "-1",
+    "spark.executorEnv.MALLOC_MMAP_THRESHOLD_": "1073741824",
+    "spark.executorEnv.ARROW_DEFAULT_MEMORY_POOL": "system",
     # Skip trailing no-data micro-batches (r10-opt, guide §1.2 step 3
     # after the §5 state-store/width levers measured no-win): this
     # engine's streaming operators advance their watermarks with DATA
@@ -141,12 +131,10 @@ _DEFAULTS = {
     # sf0.1 with the flag off; same-session rotated A/B min-of-3 at
     # sf0.1: sessionization_parity 3.76 -> 1.96 s, stream_stream_join
     # 4.41 -> 2.40, stream_dedup 2.73 -> 1.79, watermark_window 4.32 ->
-    # 3.73, locf/ewma/holt/static par. Env-tunable: pipelines that rely
-    # on event-time timeouts firing WITHOUT new data (wall-clock-ish
-    # flush of a quiescent stream) should restore true.
-    "spark.sql.streaming.noDataMicroBatches.enabled": os.environ.get(
-        "SPARK_GRAFT_STREAM_NODATA_BATCHES", "false"
-    ),
+    # 3.73, locf/ewma/holt/static par. Pipelines that rely on
+    # event-time timeouts firing WITHOUT new data (wall-clock-ish flush
+    # of a quiescent stream) should set it back to true at runtime.
+    "spark.sql.streaming.noDataMicroBatches.enabled": "false",
     # PySpark call-site capture off. When on, every Column / functions
     # call goes through pyspark.errors.utils._with_origin, which walks
     # the Python stack and makes 4-8 extra py4j round trips (active
@@ -155,7 +143,7 @@ _DEFAULTS = {
     # request built its 32-column projection in 2,287 round trips. What
     # is lost is only the Python file:line "DataFrame query context"
     # appended to analysis-error text; exception classes and messages
-    # are unchanged. Not env-tunable: nothing here reads that context.
+    # are unchanged. Nothing here reads that context.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 

@@ -103,6 +103,6 @@ def fetch_and_load(
     """fetch_namespace + read_fsimage_binary in one call — the
     `fetch -> load -> refresh` convenience the reference exposes as
     /fetchNamespace. ``load_kwargs`` pass through to the loader
-    (batch, max_depth, scratch_dir)."""
+    (batch, scratch_dir)."""
     path = fetch_namespace(namenode_url, dest_dir, transport=transport)
     return read_fsimage_binary(spark, path, **load_kwargs)

@@ -28,7 +28,10 @@ emitting batch byte-ranges; the expensive full decode then runs in
 parallel Arrow-batched mapInPandas tasks, each re-reading just its
 range. The tiny string table broadcasts into the decode kernel, so
 user/group resolution costs no join. Paths are rebuilt by the same
-root-down level walk the OIV-XML reader uses (loader.resolve_paths).
+root-down level walk the OIV-XML reader uses (loader.resolve_paths):
+one join and one checkpoint per tree level, bounded by HDFS's own
+MAX_PATH_DEPTH (1000), and the decoded rows take the same projection
+onto the stored schema (loader.stored_inodes).
 
 Compressed images (FileSummary.codec set — the reference loads them
 via Hadoop's FSImageUtil codec wiring, NameNodeLoader.java:361): each
@@ -67,10 +70,9 @@ import struct
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from nnanalytics_spark.sources import oivgen
-from nnanalytics_spark.sources.loader import resolve_paths
+from nnanalytics_spark.sources.loader import resolve_paths, stored_inodes
 
 MAGIC = b"HDFSIMG1"
 
@@ -512,14 +514,16 @@ def read_fsimage_binary(
     spark: SparkSession,
     path: str,
     batch: int = 4096,
-    max_depth: int = 64,
     scratch_dir: str | None = None,
 ) -> DataFrame:
     """Parse a binary protobuf fsimage into the stored inode schema (the
-    same 24 columns read_fsimage_xml emits). See module docstring for the
-    scan/decode split and the compressed-section sidecar (``scratch_dir``
-    must be executor-visible on a real cluster; defaults to the system
-    temp dir, which is correct for local mode)."""
+    same 24 columns read_fsimage_xml emits, through the same
+    loader.stored_inodes projection), with paths of any depth HDFS
+    allows. ``batch`` is the number of messages per decode range. See
+    the module docstring for the scan/decode split and the
+    compressed-section sidecar (``scratch_dir`` must be executor-visible
+    on a real cluster; defaults to the system temp dir, which is correct
+    for local mode)."""
     import pandas as pd
 
     summary = parse_summary(path)
@@ -584,38 +588,8 @@ def read_fsimage_binary(
     inodes = ranges_df(ino_ranges).mapInPandas(decode_inodes, _INODE_SCHEMA)
     edges = ranges_df(dir_ranges).mapInPandas(decode_edges, "parent_id long, id long")
 
-    paths = resolve_paths(inodes.select("id", "name"), edges, max_depth)
-    is_dir = F.col("type") == "dir"
-    out = inodes.join(paths, "id")
-    return out.select(
-        "id",
-        "type",
-        "path",
-        F.coalesce(F.nullif(F.col("name"), F.lit("")), F.lit("/")).alias("name"),
-        F.coalesce(
-            F.nullif(F.regexp_extract(F.col("path"), r"^(.*)/[^/]+$", 1), F.lit("")),
-            F.lit("/"),
-        ).alias("parent"),
-        "user",
-        "group",
-        "permission",
-        "accessTime",
-        "modTime",
-        F.when(is_dir, F.lit(None)).otherwise(F.col("fileSize")).alias("fileSize"),
-        "blockSize",
-        F.when(is_dir, F.lit(None)).otherwise(F.col("numBlocks")).cast("int").alias("numBlocks"),
-        "fileReplica",
-        "storagePolicyId",
-        "nsQuota",
-        "dsQuota",
-        F.lit(0).cast("long").alias("nsQuotaUsed"),
-        F.lit(0).cast("long").alias("dsQuotaUsed"),
-        F.lit(False).alias("isUnderConstruction"),
-        F.lit(False).alias("isWithSnapshot"),
-        F.lit(False).alias("hasAcl"),
-        "hasEcPolicy",
-        F.lit(0).cast("int").alias("dirNumChildren"),
-    )
+    paths = resolve_paths(inodes.select("id", "name"), edges)
+    return stored_inodes(inodes.join(paths, "id"))
 
 
 # --------------------------------------------------------------------------

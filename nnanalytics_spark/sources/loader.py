@@ -19,6 +19,8 @@ and keeps it fresh by tailing the edit log. The Spark-native equivalents:
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -153,51 +155,88 @@ def _symbolic_perm_bits(sym: F.Column) -> F.Column:
     return bits.cast("int")
 
 
-def resolve_paths(names: DataFrame, edges: DataFrame, max_depth: int = 64) -> DataFrame:
+#: HDFS's own path-depth limit (FSDirectory.MAX_PATH_DEPTH): a deeper
+#: level can only come from a corrupt or cyclic image.
+MAX_PATH_DEPTH = 1000
+
+
+def resolve_paths(names: DataFrame, edges: DataFrame) -> DataFrame:
     """Rebuild absolute paths from (id, name) + (parent_id, id) edges by a
-    root-down level walk: one equi-join per tree level. Level d resolves
-    in round d, so the loop runs tree-depth rounds (HDFS trees: tens, not
-    thousands), and every join is keyed on the 8-byte parent id.
-    localCheckpoint per round keeps the plan from nesting. Shared by the
-    OIV-XML and binary-protobuf fsimage readers — both formats carry
-    names + edges, never absolute paths."""
-    nodes = names.join(edges, "id", "left")
-    resolved = (
-        nodes.filter(F.col("parent_id").isNull())
-        .select("id", F.lit("/").alias("path"))
-        .localCheckpoint()
-    )
-    frontier = resolved
-    remaining = nodes.filter(F.col("parent_id").isNotNull()).localCheckpoint()
-    for _ in range(max_depth):
-        if remaining.isEmpty():
-            break
-        step = remaining.join(
-            frontier.select(F.col("id").alias("parent_id"), F.col("path").alias("pp")),
-            "parent_id",
-        ).select(
-            "id",
-            F.concat(
-                F.when(F.col("pp") == "/", F.lit("")).otherwise(F.col("pp")),
-                F.lit("/"),
-                F.col("name"),
-            ).alias("path"),
+    root-down level walk. The (id, parent_id, name) node table is
+    checkpointed once; level d is ``nodes ⋈ level d-1`` on ``parent_id``,
+    checkpointed once. A tree node has one parent, so it is reached in
+    exactly one level; the walk stops at the first empty level and
+    returns the union of the levels. Roots (no parent edge) map to "/",
+    orphans are dropped, and a level past ``MAX_PATH_DEPTH`` raises.
+    Shared by the OIV-XML and binary-protobuf fsimage readers — both
+    formats carry names + edges, never absolute paths."""
+    nodes = names.join(edges, "id", "left").localCheckpoint()
+    level = nodes.filter(F.col("parent_id").isNull()).select("id", F.lit("/").alias("path"))
+    levels = [level]
+    for _ in range(MAX_PATH_DEPTH + 1):
+        parents = level.select(
+            F.col("id").alias("parent_id"),
+            F.when(F.col("path") == "/", "").otherwise(F.col("path")).alias("pp"),
         )
-        frontier = step.localCheckpoint()
-        if frontier.isEmpty():
-            break
-        resolved = resolved.unionByName(frontier).localCheckpoint()
-        remaining = remaining.join(frontier.select("id"), "id", "left_anti").localCheckpoint()
-    return resolved
+        level = (
+            nodes.join(parents, "parent_id")
+            .select("id", F.concat("pp", F.lit("/"), "name").alias("path"))
+            .localCheckpoint()
+        )
+        if level.isEmpty():
+            return reduce(DataFrame.unionByName, levels)
+        levels.append(level)
+    raise ValueError(f"namespace deeper than {MAX_PATH_DEPTH} levels: corrupt or cyclic image")
 
 
-def read_fsimage_xml(spark: SparkSession, path: str, max_depth: int = 64) -> DataFrame:
+def stored_inodes(decoded: DataFrame) -> DataFrame:
+    """The stored-schema tail both image readers share (fixture.SCHEMA).
+    ``decoded`` carries id, type ("dir"/"file"), path, the raw name and
+    the decoded columns through dsQuota plus hasEcPolicy. The root's
+    empty name becomes "/", parent is cut from path, a directory's
+    fileSize and numBlocks are null, and the fields no image format
+    carries take their defaults."""
+    is_dir = F.col("type") == "dir"
+    return decoded.select(
+        "id",
+        "type",
+        "path",
+        F.coalesce(F.nullif(F.col("name"), F.lit("")), F.lit("/")).alias("name"),
+        F.coalesce(
+            F.nullif(F.regexp_extract(F.col("path"), r"^(.*)/[^/]+$", 1), F.lit("")),
+            F.lit("/"),
+        ).alias("parent"),
+        "user",
+        "group",
+        "permission",
+        "accessTime",
+        "modTime",
+        F.when(is_dir, F.lit(None)).otherwise(F.col("fileSize")).alias("fileSize"),
+        "blockSize",
+        F.when(is_dir, F.lit(None)).otherwise(F.col("numBlocks")).cast("int").alias("numBlocks"),
+        "fileReplica",
+        "storagePolicyId",
+        "nsQuota",
+        "dsQuota",
+        F.lit(0).cast("long").alias("nsQuotaUsed"),
+        F.lit(0).cast("long").alias("dsQuotaUsed"),
+        F.lit(False).alias("isUnderConstruction"),
+        F.lit(False).alias("isWithSnapshot"),
+        F.lit(False).alias("hasAcl"),
+        "hasEcPolicy",
+        F.lit(0).cast("int").alias("dirNumChildren"),
+    )
+
+
+def read_fsimage_xml(spark: SparkSession, path: str) -> DataFrame:
     """Parse an `hdfs oiv -p XML` export into the stored inode schema.
 
     The XML carries names + parent/child edges, not absolute paths
     (PBImageXmlWriter: INodeSection then INodeDirectorySection), so paths
-    are rebuilt level by level (resolve_paths). The inode scan itself
-    stays columnar/pruned; only (id, parent, name) rides the path walk.
+    are rebuilt level by level, to any depth HDFS allows (resolve_paths),
+    and projected through stored_inodes like the binary reader's. The
+    inode scan itself stays columnar/pruned; only (id, parent, name)
+    rides the path walk.
     """
     inodes = (
         spark.read.format("xml")
@@ -215,49 +254,36 @@ def read_fsimage_xml(spark: SparkSession, path: str, max_depth: int = 64) -> Dat
         F.col("parent").alias("parent_id"), F.explode("child").alias("id")
     )
     names = inodes.select("id", F.coalesce("name", F.lit("")).alias("name"))
-    paths = resolve_paths(names, edges, max_depth)
+    paths = resolve_paths(names, edges)
 
-    is_dir = F.col("type") == "DIRECTORY"
     perm_parts = F.split(F.col("permission"), ":")
+    blocks = F.coalesce(F.col("blocks.block"), F.array())
     block_bytes = F.coalesce(
         F.aggregate(
-            F.coalesce(F.col("blocks.block"), F.array()),
+            blocks,
             F.lit(0).cast("long"),
             lambda acc, b: acc + F.coalesce(b["numBytes"], F.lit(0)),
         ),
         F.lit(0).cast("long"),
     )
-    out = inodes.join(paths, "id")
-    return out.select(
-        F.col("id"),
-        F.when(is_dir, "dir").otherwise("file").alias("type"),
-        F.col("path"),
-        F.coalesce(
-            F.nullif(F.col("name"), F.lit("")), F.lit("/")
-        ).alias("name"),
-        F.coalesce(
-            F.nullif(F.regexp_extract(F.col("path"), r"^(.*)/[^/]+$", 1), F.lit("")),
-            F.lit("/"),
-        ).alias("parent"),
-        F.element_at(perm_parts, 1).alias("user"),
-        F.element_at(perm_parts, 2).alias("group"),
-        _symbolic_perm_bits(F.element_at(perm_parts, 3)).alias("permission"),
-        F.coalesce("atime", F.lit(0)).alias("accessTime"),
-        F.coalesce("mtime", F.lit(0)).alias("modTime"),
-        F.when(is_dir, F.lit(None)).otherwise(block_bytes).alias("fileSize"),
-        F.coalesce("preferredBlockSize", "perferredBlockSize").alias("blockSize"),
-        F.when(is_dir, F.lit(None)).otherwise(
-            F.size(F.coalesce(F.col("blocks.block"), F.array()))
-        ).cast("int").alias("numBlocks"),
-        F.col("replication").alias("fileReplica"),
-        F.coalesce("storagePolicyId", F.lit(0)).alias("storagePolicyId"),
-        F.col("nsquota").alias("nsQuota"),
-        F.col("dsquota").alias("dsQuota"),
-        F.lit(0).cast("long").alias("nsQuotaUsed"),
-        F.lit(0).cast("long").alias("dsQuotaUsed"),
-        F.lit(False).alias("isUnderConstruction"),
-        F.lit(False).alias("isWithSnapshot"),
-        F.lit(False).alias("hasAcl"),
-        F.lit(False).alias("hasEcPolicy"),
-        F.lit(0).cast("int").alias("dirNumChildren"),
+    return stored_inodes(
+        inodes.join(paths, "id").select(
+            "id",
+            F.when(F.col("type") == "DIRECTORY", "dir").otherwise("file").alias("type"),
+            "path",
+            "name",
+            F.element_at(perm_parts, 1).alias("user"),
+            F.element_at(perm_parts, 2).alias("group"),
+            _symbolic_perm_bits(F.element_at(perm_parts, 3)).alias("permission"),
+            F.coalesce("atime", F.lit(0)).alias("accessTime"),
+            F.coalesce("mtime", F.lit(0)).alias("modTime"),
+            block_bytes.alias("fileSize"),
+            F.coalesce("preferredBlockSize", "perferredBlockSize").alias("blockSize"),
+            F.size(blocks).alias("numBlocks"),
+            F.col("replication").alias("fileReplica"),
+            F.coalesce("storagePolicyId", F.lit(0)).alias("storagePolicyId"),
+            F.col("nsquota").alias("nsQuota"),
+            F.col("dsquota").alias("dsQuota"),
+            F.lit(False).alias("hasEcPolicy"),
+        )
     )

@@ -155,8 +155,7 @@ def test_transform_whatif_diskspace(engine, inodes_pdf):
         Query(
             set="files",
             sums=["diskspaceConsumed"],
-            transform_conditions=[("fileReplica", "gte", "1")],
-            transform_outputs={"fileReplica": 1},
+            transforms=[([("fileReplica", "gte", "1")], "fileReplica", 1)],
             now_ms=NOW,
         )
     ).collect()[0][0]

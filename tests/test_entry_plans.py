@@ -727,7 +727,7 @@ def test_grouped_kernel_width_pinned_against_aqe_floor(spark):
 
     for fn in (_s.within_cell_pairs_above, _s._blocked_local_topk):
         assert "_pin_kernel_width" in inspect.getsource(fn), fn.__name__
-    # session default: compute-dense floor is active and env-tunable
+    # session default: the compute-dense floor is active
     assert spark.conf.get(
         "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     ) in ("64k", "65536", "65536b")

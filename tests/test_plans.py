@@ -109,8 +109,7 @@ def test_transforms_fold_into_scan_stage(stored):
     q = Query(
         set="files",
         sums=["diskspaceConsumed"],
-        transform_conditions=[("fileReplica", "gte", "2")],
-        transform_outputs={"fileReplica": 1},
+        transforms=[([("fileReplica", "gte", "2")], "fileReplica", 1)],
         now_ms=fixture.NOW_MS,
     )
     plan = plan_of(eng.filter_sum(q))

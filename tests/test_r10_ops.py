@@ -147,7 +147,7 @@ def test_no_data_microbatches_disabled_by_default(spark):
     fires sentinel-key timeouts that every harness filters out — one
     state stage + commit cycle per streaming query for nothing. Verified
     row-identical on all 8 streaming parity queries at sf0.01 and sf0.1;
-    env-tunable for pipelines that need quiescent-stream timeouts."""
+    pipelines that need quiescent-stream timeouts set it back at runtime."""
     assert (
         spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
         == "false"

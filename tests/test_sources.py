@@ -52,12 +52,6 @@ def test_registered_directory_stats(inodes, inodes_pdf):
         assert out[d] == (len(sub), sub.dsc.sum()), d
 
 
-def test_parse_filters_rest_style():
-    got = ir.parse_filters("fileSize,user", "eq:0,notEq:hdfs")
-    assert got == [("fileSize", "eq", "0"), ("user", "notEq", "hdfs")]
-    assert ir.parse_filters("", "") == []
-
-
 def test_parse_filter_triplets():
     got = ir.parse_filter_triplets("fileSize:lte:1024,fileSize:gt:0")
     assert got == [("fileSize", "lte", "1024"), ("fileSize", "gt", "0")]
@@ -131,6 +125,44 @@ def test_fsimage_binary_matches_xml_reader(spark, tmp_path):
     rb = sorted(tuple(r) for r in from_bin.select(cols).collect())
     assert len(rb) == 1 + 3 + 3 * 7
     assert rx == rb
+
+
+def test_resolve_paths_walks_a_deep_chain(spark):
+    """A 70-level chain resolves every path (the walk is bounded by
+    HDFS's MAX_PATH_DEPTH, not a default that drops deep inodes); an
+    orphan, whose parent is not in the image, is dropped."""
+    depth = 70
+    names = spark.createDataFrame(
+        [(i, f"d{i}" if i else "") for i in range(depth + 1)] + [(999, "orphan")],
+        "id long, name string",
+    )
+    edges = spark.createDataFrame(
+        [(i - 1, i) for i in range(1, depth + 1)] + [(998, 999)], "parent_id long, id long"
+    )
+    got = dict(loader.resolve_paths(names, edges).collect())
+    assert len(got) == depth + 1
+    assert got[0] == "/" and got[1] == "/d1"
+    assert got[depth] == "".join(f"/d{i}" for i in range(1, depth + 1))
+
+
+def test_fsimage_load_holds_one_checkpoint_per_level(spark, tmp_path):
+    """Loading a depth-2 image leaves in storage only the walk's node
+    table, one checkpoint per non-empty level and the held table."""
+    from nnanalytics_spark import __main__ as cli
+    from nnanalytics_spark.sources import fsimage
+
+    img = fsimage.write_fsimage_binary(str(tmp_path), n_dirs=2, files_per_dir=3)
+
+    def stored():
+        return {info.id() for info in spark._jsc.sc().getRDDStorageInfo()}
+
+    before = stored()
+    inodes = cli._load_inodes(spark, img, "fsimage")
+    try:
+        assert inodes.count() == 1 + 2 + 2 * 3
+        assert len(stored() - before) <= 6
+    finally:
+        inodes.unpersist()
 
 
 def test_fsimage_gzip_sections_match_uncompressed(spark, tmp_path):

@@ -65,8 +65,7 @@ def test_parse_transforms():
         "&transformFields=fileReplica&transformOutputs=2",
         now_ms=NOW,
     )
-    assert q.transform_conditions == [("fileReplica", "eq", "1")]
-    assert q.transform_outputs == {"fileReplica": 2}
+    assert q.transforms == [([("fileReplica", "eq", "1")], "fileReplica", 2)]
 
 
 def test_parse_rejects():
@@ -181,8 +180,7 @@ def test_url_transform_histogram(engine):
     want = engine.histogram(
         Query(
             set="files", type="user", sums=["diskspaceConsumed"],
-            transform_conditions=[("fileReplica", "eq", "1")],
-            transform_outputs={"fileReplica": 3},
+            transforms=[([("fileReplica", "eq", "1")], "fileReplica", 3)],
             now_ms=NOW,
         )
     )

@@ -19,12 +19,13 @@ Usage: python tools/check_dtypes.py [query_name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.check_oracle import SF_DIR, attach_views  # noqa: E402
 

@@ -27,10 +27,12 @@ each operator's documented contract, checked by unit tests, not here.
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 DIRS = {"empty": "/tmp/sf_empty", "one": "/tmp/sf_one", "nulls": "/tmp/sf_nulls"}
 
@@ -44,7 +46,7 @@ def main() -> None:
 
     spark = get_spark(f"degenerate-{mode}")
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", os.path.join(ROOT, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -16,7 +16,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod
 from bench import _native_twins
@@ -31,7 +32,7 @@ def main() -> None:
         args = args[2:]
     tag, names = args[0], args[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    out_dir = os.path.join("/root/repo/plans", rnd)
+    out_dir = os.path.join(ROOT, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("dump_plan")
     queries = {**entry_mod.queries(), **_native_twins()}

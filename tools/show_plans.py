@@ -3,6 +3,11 @@ PLANS.md, so plan quality (pushdown, broadcast choice, shuffle count,
 codegen coverage) can be reviewed without launching Spark.
 
     python tools/show_plans.py [sf_dir]
+
+The output is host-independent, so it diffs against the committed file
+on any machine: the session is pinned to the committed file's
+parallelism (``local[32]``, 32 shuffle partitions) and the streaming
+rows' random temp-directory locations become a placeholder.
 """
 
 from __future__ import annotations
@@ -11,7 +16,10 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# read by nnanalytics_spark.session at import: local[32], 32 shuffle partitions
+os.environ["SPARK_GRAFT_CPUS"] = "32"
 
 import __spark_entry__ as entry_mod
 from bench import HEADLINE, _native_twins
@@ -40,6 +48,7 @@ def main() -> None:
         )
         # strip the per-run parquet task noise for stable diffs
         plan = re.sub(r"file:[^,\]\s]+", "file:<sf_dir>", plan)
+        plan = re.sub(r"MetadataLogFileIndex \[[^\]]*\]", "MetadataLogFileIndex [<tmp_dir>]", plan)
         n_exchanges = plan.count("Exchange")
         flagged = sorted(
             {f.rule for f in lint(df) if f.severity in ("error", "warn")}
@@ -53,7 +62,7 @@ def main() -> None:
             "```",
             "",
         ]
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+    path = os.path.join(ROOT, "PLANS.md")
     with open(path, "w") as fh:
         fh.write("\n".join(out))
     print(f"wrote {path} ({len(HEADLINE)} plans)")
