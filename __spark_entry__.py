@@ -2073,9 +2073,7 @@ def q_histogram2_nested(spark, sf):
     from nnanalytics_spark.core.ir import Query
 
     eng = INodeEngine(_inodes(spark, sf))
-    h2 = eng.histogram2(
-        Query(set="files", type="user", type2="group", sums=["count"], now_ms=NOW_MS)
-    )
+    h2 = eng.run(Query(set="files", type="user", type2="group", sums=["count"], now_ms=NOW_MS))
     inner = F.concat_ws("=", F.col("group"), F.col("count").cast("string"))
     return (
         h2.groupBy("user")
@@ -2098,7 +2096,7 @@ def q_having_indexed(spark, sf):
         having="0:gte:100;1:lt:759567",
         now_ms=NOW_MS,
     )
-    return eng.histogram(q)
+    return eng.run(q)
 
 
 def q_url_histogram(spark, sf):

@@ -4,7 +4,10 @@ The reference compiles every REST/SQL request into the flat tuple
 (set, [filter:op:value...], type, sum | find, having, top/bottom, sort,
 parentDirDepth, timeRange, transforms, limit) — see SURVEY §3.3 and
 analytics/web/NamenodeAnalyticsMethods.java. ``Query`` is that tuple as a
-dataclass; ``INodeEngine.run(query)`` compiles it to a DataFrame plan.
+dataclass; ``INodeEngine.run(query)`` compiles it to a DataFrame plan,
+picking the shape from the tuple alone (/divide's two tuples go to
+``INodeEngine.divide``). The URL, SQL-dialect and cached-query front ends
+all build a ``Query`` and call ``run``.
 
 ``now_ms`` pins the clock once per query so relative-time filters and time
 histograms are deterministic (the reference reads the wall clock at query

@@ -168,6 +168,23 @@ class INodeEngine:
         return out
 
     # ------------------------------------------------------- query shapes
+    def run(self, query: Query) -> DataFrame:
+        """The plan for ``query``, its shape read from the Query alone —
+        the one entry the URL, SQL and cached-query front ends share
+        (the reference runs every parsed request through one invoker,
+        NamenodeAnalyticsMethods.java:2466-2515). /histogram3's K sums
+        and finds are /histogram's one groupBy().agg, value columns in
+        sums-then-finds order (NamenodeAnalyticsMethods.java:1890-1944)."""
+        if query.type2 is not None:
+            return self.histogram2(query)
+        if query.type is not None:
+            return self.histogram(query)
+        if query.sums:
+            return self.filter_sum(query)
+        if query.finds:
+            return self.find_extremum(query)
+        return self.dump_paths(query)
+
     def filter_sum(self, query: Query) -> DataFrame:
         """/filter with sum(s): scalar aggregate(s) over the filtered set
         (AbstractQueryEngine.java:508-575; multi-sum
@@ -207,14 +224,6 @@ class INodeEngine:
         k1 = self._group_key(df, query.type, query).alias(query.type)
         k2 = self._group_key(df, query.type2, query).alias(query.type2)
         return df.groupBy(k1, k2).agg(*self._sum_exprs(df, query))
-
-    def histogram3(self, query: Query) -> DataFrame:
-        """/histogram3: K sums + finds over one grouping, merged per key
-        (NamenodeAnalyticsMethods.java:1890-1944). The reference loops K
-        full scans then merges; here it is ONE groupBy().agg(k1..kK) —
-        value column order = sums order then finds order, preserving the
-        reference's merge contract."""
-        return self.histogram(query)
 
     def divide(self, q1: Query, q2: Query) -> DataFrame:
         """/divide: sum(query1) / sum(query2)

@@ -185,31 +185,6 @@ def issue_ranking(per_user: DataFrame, metric: str, k: int = 10, top: bool = Tru
     return per_user.select("user", metric).orderBy(order, "user").limit(k)
 
 
-class CachedQueryRegistry:
-    """Custom cached queries (SuggestionsEngine.java:743-767, 892-991):
-    user-registered logical queries re-run on every sweep."""
-
-    def __init__(self) -> None:
-        self._queries: dict[str, tuple] = {}
-
-    def register(self, name: str, query, shape: str = "sum") -> None:
-        if shape not in ("sum", "histogram"):
-            raise ValueError(f"unsupported cached query shape {shape!r}")
-        self._queries[name] = (query, shape)
-
-    def unregister(self, name: str) -> None:
-        self._queries.pop(name, None)
-
-    def names(self) -> list[str]:
-        return sorted(self._queries)
-
-    def refresh(self, engine) -> dict[str, DataFrame]:
-        out = {}
-        for name, (query, shape) in self._queries.items():
-            out[name] = engine.histogram(query) if shape == "histogram" else engine.filter_sum(query)
-        return out
-
-
 def run_sweep(inodes: DataFrame, now_ms: int, output_dir: str | None = None) -> dict[str, DataFrame]:
     """The full periodic sweep: compute every cached report; optionally
     persist each as parquet (the MapDB/HSQL cache analog — a `history`

@@ -24,7 +24,7 @@ the served DataFrame (``createOrReplaceTempView``) takes any statement
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
@@ -136,8 +136,6 @@ def _split_where(where: str) -> list[str]:
 @dataclass
 class ParsedSql:
     query: Query
-    shape: str  # 'dump' | 'sum' | 'find' | 'histogram'
-    extras: dict = field(default_factory=dict)
 
 
 def parse_select(statement: str, session: SqlSession | None = None) -> ParsedSql:
@@ -179,18 +177,15 @@ def parse_select(statement: str, session: SqlSession | None = None) -> ParsedSql
     agg_item = items[1] if group_key and len(items) > 1 else items[0]
     sums: list[str] = []
     finds: list[str] = []
-    shape = "dump"
     agg = _AGG_RE.match(agg_item)
     if agg:
         func, arg = agg.group(1).upper(), agg.group(2)
         if func == "COUNT":
-            sums, shape = ["count"], "sum"
+            sums = ["count"]
         elif func == "SUM":
-            sums, shape = [arg], "sum"
+            sums = [arg]
         else:
-            finds, shape = [f"{func.lower()}:{arg}"], "find"
-    if group_key:
-        shape = "histogram"
+            finds = [f"{func.lower()}:{arg}"]
 
     sort = None
     if m.group("order"):
@@ -211,7 +206,7 @@ def parse_select(statement: str, session: SqlSession | None = None) -> ParsedSql
         parent_dir_depth=session.parent_dir_depth,
         time_range=session.time_range,
     )
-    return ParsedSql(query=query, shape=shape)
+    return ParsedSql(query=query)
 
 
 def show_tables() -> list[str]:
@@ -239,14 +234,7 @@ def execute(statement: str, engine, session: SqlSession | None = None) -> DataFr
         return describe(desc.group(1))
     if session.execute_set(statement):
         return []
-    parsed = parse_select(statement, session)
-    if parsed.shape == "histogram":
-        return engine.histogram(parsed.query)
-    if parsed.shape == "sum":
-        return engine.filter_sum(parsed.query)
-    if parsed.shape == "find":
-        return engine.find_extremum(parsed.query)
-    return engine.dump_paths(parsed.query)
+    return engine.run(parse_select(statement, session).query)
 
 
 def _split_statements(text: str) -> list[str]:

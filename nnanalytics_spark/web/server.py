@@ -43,6 +43,7 @@ import json
 import os
 import stat
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlsplit
 
@@ -59,25 +60,16 @@ from nnanalytics_spark.core.filters import (
     OLDER_OPS,
     STRING_OPS,
 )
+from nnanalytics_spark.core.url import param
 from nnanalytics_spark.inode import columns as reg
 from nnanalytics_spark.inode import render, suggestions
+from nnanalytics_spark.inode.operations import SUPPORTED, Operation, OperationRegistry
 from nnanalytics_spark.sql import dialect
 
 _HISTOGRAM_OUTPUTS = ("json", "csv", "chart")
 
 _DISCOVERY = {
-    "endpoints": lambda: sorted(
-        set(urlmod.ENDPOINTS)
-        | {
-            "contentSummary", "info", "metrics", "loadingStatus", "users",
-            "fileAge", "fileTypes", "quotas", "directories", "top", "bottom",
-            "suggestions", "queryGuard", "refresh", "sql", "credentials",
-            "submitOperation", "listOperations", "abortOperation",
-            "setCachedQuery", "removeCachedQuery", "getCachedQuery",
-            "cachedMaps", "history", "saveNamespace", "token", "operations",
-        }
-    ),
-    "operations": lambda: list(_SUPPORTED_OPS()),
+    "operations": lambda: list(SUPPORTED),
     "sets": lambda: list(reg.SETS),
     "filters": lambda: sorted(reg.FILTER_FILE | reg.FILTER_DIR),
     "filterOps": lambda: sorted(LONG_OPS | AGO_OPS | OLDER_OPS | STRING_OPS | DATE_OPS | BOOL_OPS),
@@ -86,6 +78,29 @@ _DISCOVERY = {
     "histograms": lambda: sorted(reg.TYPE_FILE | reg.TYPE_DIR),
     "transforms": lambda: ["fileReplica"],
     "histogramOutputs": lambda: list(_HISTOGRAM_OUTPUTS),
+}
+
+#: endpoint → the AnalyticsWebServer method that answers it; /endpoints
+#: lists these names, and /login /logout when authentication is on
+#: (``handle`` answers those two before routing)
+_ROUTES = {
+    "endpoints": "_endpoints",
+    **dict.fromkeys(_DISCOVERY, "_discovery"),
+    **dict.fromkeys(("credentials", "token"), "_identity"),
+    **dict.fromkeys(("info", "loadingStatus", "metrics", "queryGuard", "refresh"), "_status"),
+    **dict.fromkeys((e for e in urlmod.ENDPOINTS if e != "dump"), "_analytic"),
+    **dict.fromkeys(("dump", "contentSummary", "users"), "_lookup"),
+    "sql": "_sql",
+    **dict.fromkeys(
+        ("suggestions", "fileAge", "fileTypes", "quotas", "directories", "top", "bottom"),
+        "_suggestion",
+    ),
+    **dict.fromkeys(("submitOperation", "listOperations", "abortOperation"), "_operations"),
+    **dict.fromkeys(("setCachedQuery", "removeCachedQuery", "getCachedQuery", "cachedMaps"), "_cached"),
+    **dict.fromkeys(
+        ("threads", "system", "config", "log", "drop", "truncate", "history", "saveNamespace"),
+        "_admin_tail",
+    ),
 }
 
 
@@ -114,9 +129,6 @@ class AnalyticsWebServer:
         port: int = 0,
         max_dump_rows: int | None = 10_000_000,  # path-dump safety cap
     ) -> None:
-        from nnanalytics_spark.inode.operations import OperationRegistry
-        from nnanalytics_spark.inode.suggestions import CachedQueryRegistry
-
         self.engine = engine
         self.authorizer = authorizer or Authorizer(enabled=False)
         self.security = security
@@ -129,7 +141,7 @@ class AnalyticsWebServer:
         from nnanalytics_spark.core.usage import UsageTracker
 
         self.operations = OperationRegistry()
-        self.cached_queries = CachedQueryRegistry()
+        self.cached_queries: dict = {}  # queryName → Query
         self.mail_transport = mail_transport
         self.max_dump_rows = max_dump_rows
         self.usage = UsageTracker()
@@ -175,7 +187,7 @@ class AnalyticsWebServer:
                 return outcome  # login/logout response or 401
             user = outcome
         elif self.security is not None:
-            user = _one(params, "proxy") or user
+            user = param(params, "proxy") or user
         try:
             self.authorizer.check(user, endpoint)
         except AuthorizationError as exc:
@@ -185,7 +197,7 @@ class AnalyticsWebServer:
         if endpoint in urlmod.ENDPOINTS or endpoint == "sql":
             self.usage.queried(user, client_ip)
         try:
-            return self._route(method, endpoint, path, query, params, body, user)
+            return self._route(endpoint, query, params, body, user)
         except (ValueError, KeyError, dialect.UnsupportedSqlError) as exc:
             return 400, "text/plain", f"{type(exc).__name__}: {exc}"
 
@@ -207,8 +219,8 @@ class AnalyticsWebServer:
         auth_header = headers.get("authorization")
         if endpoint == "login":
             form = parse_qs(body, keep_blank_values=True)
-            username = _one(params, "username") or _one(form, "username")
-            password = _one(params, "password") or _one(form, "password")
+            username = param(params, "username") or param(form, "username")
+            password = param(params, "password") or param(form, "password")
             try:
                 issued = self.security.login(username, password)
             except AuthenticationError as exc:
@@ -242,33 +254,36 @@ class AnalyticsWebServer:
         except AuthenticationError as exc:
             return 401, "text/plain", str(exc)
 
-    def _route(self, method, endpoint, path, query, params, body, user):
-        if endpoint in _DISCOVERY:
-            return 200, "application/json", json.dumps(_DISCOVERY[endpoint]())
-        if endpoint == "credentials":
-            return 200, "application/json", json.dumps(self.authorizer.access_levels(user))
-        if endpoint in ("info", "loadingStatus"):
-            return 200, "application/json", json.dumps(self.engine.info())
+    def _route(self, endpoint, query, params, body, user):
+        handler = _ROUTES.get(endpoint)
+        if handler is None:
+            return 404, "text/plain", f"unknown endpoint: /{endpoint}"
+        return getattr(self, handler)(endpoint, params, query=query, body=body, user=user)
+
+    def _now(self) -> int:
+        """The request's ``now``: the pinned clock, else the wall clock."""
+        return int(time.time() * 1000) if self.now_ms is None else self.now_ms
+
+    def _endpoints(self, endpoint, params, **_):
+        names = list(_ROUTES)
+        if self.security is not None and self.security.authentication_enabled:
+            names += ["login", "logout"]
+        return 200, "application/json", json.dumps(sorted(names))
+
+    def _discovery(self, endpoint, params, **_):
+        return 200, "application/json", json.dumps(_DISCOVERY[endpoint]())
+
+    def _identity(self, endpoint, params, *, user, **_):
+        levels = self.authorizer.access_levels(user)
+        if endpoint == "token":
+            return 200, "application/json", json.dumps({"user": user, "accessLevels": levels})
+        return 200, "application/json", json.dumps(levels)
+
+    def _status(self, endpoint, params, **_):
         if endpoint == "metrics":
             payload = dict(self.engine.metrics())
             payload["users"] = self.usage.format_for_json()
             return 200, "application/json", json.dumps(payload)
-        if endpoint == "dump":
-            inode_path = _one(params, "path")
-            if not inode_path:
-                raise ValueError("/dump requires ?path=")
-            return 200, "application/json", json.dumps(self.engine.dump_inode(inode_path), default=str)
-        if endpoint == "contentSummary":
-            inode_path = _one(params, "path")
-            if not inode_path:
-                raise ValueError("/contentSummary requires ?path=")
-            rows = self.engine.content_summary(inode_path).collect()
-            payload = rows[0].asDict() if rows else {}
-            return 200, "application/json", json.dumps(payload, default=str)
-        if endpoint == "users":
-            return 200, "application/json", json.dumps(suggestions.users(self.engine.inodes))
-        if endpoint in ("fileAge", "fileTypes", "quotas", "directories", "top", "bottom"):
-            return self._suggestion(endpoint, params)
         if endpoint == "queryGuard":
             active = self.guard.active_queries() if self.guard else {}
             return 200, "application/json", json.dumps(active)
@@ -279,42 +294,49 @@ class AnalyticsWebServer:
             # the engine drops its per-table plan pieces on reassignment
             self.engine.inodes = self.snapshot.df
             return 200, "application/json", json.dumps({"version": self.snapshot.version})
-        if endpoint == "sql":
-            statement = _one(params, "sqlStatement") or body
-            if not statement:
-                raise ValueError("/sql requires a sqlStatement parameter or body")
-            # request-scoped SqlSession: the reference builds a fresh
-            # SqlParser per /sql request (WebServerMain.java), so SET
-            # knobs apply only to later statements in the SAME request
-            # ("SET ...; SELECT ...") — a server-global session would
-            # let one client silently change every other client's
-            # parentDirDepth/timeRange
-            result = dialect.execute_statements(statement, self.engine)
-            if isinstance(result, list):
-                return 200, "application/json", json.dumps(result)
-            return 200, "text/plain", render.to_csv(result, header=True)
-        if endpoint in ("submitOperation", "listOperations", "abortOperation"):
-            return self._operations(endpoint, params)
-        if endpoint in ("setCachedQuery", "removeCachedQuery", "getCachedQuery", "cachedMaps"):
-            return self._cached(endpoint, params)
-        if endpoint == "suggestions":
-            # the reference's one-shot suggestions JSON: every file + dir
-            # scalar from the battery, one shared scan each
-            now = self.now_ms or _wall_ms()
-            merged = {}
-            for name, live in (
-                ("fileScalars", lambda: suggestions.file_scalars(self.engine.inodes, now)),
-                ("dirScalars", lambda: suggestions.dir_scalars(self.engine.inodes, now)),
-            ):
-                df = self._sweep_cache(name, now_ms=now)
-                if df is None:
-                    df = live()
-                merged.update(df.collect()[0].asDict())
-            return 200, "application/json", json.dumps(merged, default=str)
+        return 200, "application/json", json.dumps(self.engine.info())
+
+    def _lookup(self, endpoint, params, **_):
+        if endpoint == "users":
+            return 200, "application/json", json.dumps(suggestions.users(self.engine.inodes))
+        inode_path = param(params, "path")
+        if not inode_path:
+            raise ValueError(f"/{endpoint} requires ?path=")
+        if endpoint == "dump":
+            return 200, "application/json", json.dumps(self.engine.dump_inode(inode_path), default=str)
+        rows = self.engine.content_summary(inode_path).collect()
+        payload = rows[0].asDict() if rows else {}
+        return 200, "application/json", json.dumps(payload, default=str)
+
+    def _sql(self, endpoint, params, *, body, **_):
+        statement = param(params, "sqlStatement") or body
+        if not statement:
+            raise ValueError("/sql requires a sqlStatement parameter or body")
+        # request-scoped SqlSession: the reference builds a fresh
+        # SqlParser per /sql request (WebServerMain.java), so SET
+        # knobs apply only to later statements in the SAME request
+        # ("SET ...; SELECT ...") — a server-global session would
+        # let one client silently change every other client's
+        # parentDirDepth/timeRange
+        result = dialect.execute_statements(statement, self.engine)
+        if isinstance(result, list):
+            return 200, "application/json", json.dumps(result)
+        return 200, "text/plain", render.to_csv(result, header=True)
+
+    def _admin_tail(self, endpoint, params, **_):
+        """Ops-surface tail (Constants.java:298-362 endpoint enum;
+        handlers NamenodeAnalyticsMethods.java /threads /system /config
+        /log /drop /truncate /history /saveNamespace). Spark-native
+        analogs: the thread dump adds the Spark scheduler's view (active
+        jobs/stages), /system reports host + session resources, /config
+        serves the live Spark conf, /drop, /truncate and /history manage
+        the engine's registered views and the sweep-history archive (the
+        embedded-DB tables of the reference), /saveNamespace writes the
+        served table out."""
+        spark = self.engine.inodes.sparkSession
         if endpoint == "history":
             if not self.suggestions_dir:
                 raise ValueError("no suggestions history directory configured")
-            spark = self.engine.inodes.sparkSession
             hist = spark.read.parquet(f"{self.suggestions_dir}/history")
             return 200, "application/json", hist.toPandas().to_json(orient="records")
         if endpoint == "saveNamespace":
@@ -324,27 +346,6 @@ class AnalyticsWebServer:
 
             write_inode_table(self.engine.inodes, self.save_dir)
             return 200, "text/plain", "Saving namespace."
-        if endpoint == "token":
-            return 200, "application/json", json.dumps(
-                {"user": user, "accessLevels": self.authorizer.access_levels(user)}
-            )
-        if endpoint in ("threads", "system", "config", "log", "drop", "truncate"):
-            return self._admin_tail(endpoint, params)
-        if endpoint in urlmod.ENDPOINTS:
-            return self._analytic(endpoint, path, query, params)
-        return 404, "text/plain", f"unknown endpoint: /{endpoint}"
-
-    def _admin_tail(self, endpoint, params):
-        """Ops-surface tail (Constants.java:298-362 endpoint enum;
-        handlers NamenodeAnalyticsMethods.java /threads /system /config
-        /log /drop /truncate). Spark-native analogs: the thread dump adds
-        the Spark scheduler's view (active jobs/stages), /system reports
-        host + session resources, /config serves the live Spark conf,
-        /drop and /truncate manage the engine's registered views and the
-        sweep-history archive (the embedded-DB tables of the reference).
-        All six sit in the ADMIN class of the authz matrix except
-        /config (cache-reader, like the reference)."""
-        spark = self.engine.inodes.sparkSession
         if endpoint == "threads":
             tracker = spark.sparkContext.statusTracker()
             return 200, "application/json", json.dumps(
@@ -377,7 +378,7 @@ class AnalyticsWebServer:
                 }
             )
         if endpoint == "config":
-            key = _one(params, "key")
+            key = param(params, "key")
             if key:
                 value = spark.conf.get(key, None)
                 if value is None:
@@ -388,7 +389,7 @@ class AnalyticsWebServer:
         if endpoint == "log":
             if not self.log_file:
                 raise ValueError("no log file configured")
-            limit = int(_one(params, "charsLimit") or 4000)
+            limit = int(param(params, "charsLimit") or 4000)
             try:
                 with open(self.log_file, encoding="utf-8", errors="replace") as fh:
                     fh.seek(0, 2)
@@ -398,11 +399,10 @@ class AnalyticsWebServer:
             except OSError as exc:
                 raise ValueError(f"cannot read log file: {exc}") from exc
         if endpoint == "drop":
-            name = _one(params, "table")
+            name = param(params, "table")
             if not name:
                 raise ValueError("/drop requires ?table=")
-            if name in self.cached_queries.names():
-                self.cached_queries.unregister(name)
+            if self.cached_queries.pop(name, None) is not None:
                 return 200, "text/plain", f"Dropped cached query {name}."
             # the session catalog drops the name only: Catalog.dropTempView
             # would also uncache every plan equal to the view's, which for
@@ -413,11 +413,10 @@ class AnalyticsWebServer:
         # truncate: rewrite the sweep-history archive keeping `limit` days
         if not self.suggestions_dir:
             raise ValueError("no suggestions history directory configured")
-        limit_days = int(_one(params, "limit") or 0)
+        limit_days = int(param(params, "limit") or 0)
         if limit_days <= 0:
             raise ValueError("/truncate requires ?limit=<days> > 0")
-        now = self.now_ms or _wall_ms()
-        cutoff = now - limit_days * 86_400_000
+        cutoff = self._now() - limit_days * 86_400_000
         hist_dir = f"{self.suggestions_dir}/history"
         import shutil
 
@@ -438,56 +437,55 @@ class AnalyticsWebServer:
         shutil.rmtree(old_dir)
         return 200, "text/plain", f"Truncated history to {limit_days} days ({len(kept_pdf)} rows kept)."
 
-    def _operations(self, endpoint, params):
+    def _operations(self, endpoint, params, **_):
         """/submitOperation + /listOperations + /abortOperation
         (NamenodeAnalyticsMethods.java:2065-2434): `operation` is
         kind[:argument] ("delete", "setReplication:2"); `sleep` is
         accepted for parity and ignored — pacing here is batch draws by
-        the executor, not a per-inode thread sleep."""
-        from nnanalytics_spark.inode.operations import Operation
-
+        the executor, not a per-inode thread sleep. The rest of the
+        query string is the query, parsed and checked like /filter's."""
         if endpoint == "listOperations":
             return 200, "application/json", json.dumps(self.operations.list_operations())
         if endpoint == "abortOperation":
-            op_id = _one(params, "id")
+            op_id = param(params, "id")
             if op_id is None:
                 raise ValueError("/abortOperation requires ?id=")
             self.operations.abort(int(op_id))
             return 200, "text/plain", f"Aborted operation {op_id}."
-        op_str = _one(params, "operation")
+        op_str = param(params, "operation")
         if not op_str:
             raise ValueError("No operation defined. Please check /operations.")
+        query = urlmod.parse_params(params, self.now_ms, extra=("operation", "sleep"))
         kind, _, arg = op_str.partition(":")
         op = Operation(kind, int(arg) if arg else None)
-        query = urlmod._build_query(params, self.now_ms)
         op_id = self.operations.submit(self.engine, query, op)
         return 200, "text/plain", str(op_id)
 
-    def _cached(self, endpoint, params):
+    def _cached(self, endpoint, params, **_):
         """Custom cached-query surface (SuggestionsEngine.java:743-767):
-        register a Query under a name, re-runnable on demand and by the
-        sweep."""
+        register a Query under a name and run it on demand, through
+        ``INodeEngine.run`` like any other request."""
         if endpoint == "cachedMaps":
-            return 200, "application/json", json.dumps(self.cached_queries.names())
-        name = _one(params, "queryName")
+            return 200, "application/json", json.dumps(sorted(self.cached_queries))
+        name = param(params, "queryName")
         if not name:
             raise ValueError(f"/{endpoint} requires ?queryName=")
         if endpoint == "setCachedQuery":
-            query = urlmod._build_query(params, self.now_ms)
-            shape = "histogram" if _one(params, "type") else "sum"
-            self.cached_queries.register(name, query, shape)
+            self.cached_queries[name] = urlmod.parse_params(params, self.now_ms, extra=("queryName",))
             return 200, "text/plain", f"{name} set for analysis."
         if endpoint == "removeCachedQuery":
-            self.cached_queries.unregister(name)
+            self.cached_queries.pop(name, None)
             return 200, "text/plain", f"{name} removed from analysis."
         # getCachedQuery: run it now
-        if name not in self.cached_queries.names():
+        if name not in self.cached_queries:
             raise KeyError(f"no cached query named {name!r}")
-        df = self.cached_queries.refresh(self.engine)[name]
+        query = self.cached_queries[name]
+        df = self.engine.run(query)
         rows = df.collect()
         if len(rows) == 1 and len(rows[0]) == 1:
             return 200, "text/plain", str(rows[0][0])
-        return 200, "application/json", render.to_json(df)
+        to_json = render.two_level_to_json if query.type2 else render.to_json
+        return 200, "application/json", to_json(df)
 
     def _maybe_email(self, endpoint, params, rows) -> None:
         """Email-sink side channel (MailOutput.java): when the request
@@ -497,8 +495,8 @@ class AnalyticsWebServer:
         email" — the HTTP response is unaffected either way, matching the
         reference's alerting contract where the query result is returned
         regardless and the mail leg is best-effort."""
-        email_to = _one(params, "emailTo")
-        conditions = _one(params, "emailConditions")
+        email_to = param(params, "emailTo")
+        conditions = param(params, "emailConditions")
         if not email_to or not conditions or self.mail_transport is None:
             return
         from nnanalytics_spark.inode import mail
@@ -516,9 +514,9 @@ class AnalyticsWebServer:
                 histogram=hist,
                 highlight_keys=highlight,
                 email_to=email_to.split(","),
-                email_from=_one(params, "emailFrom") or "nna@localhost",
-                email_cc=(_one(params, "emailCC") or "").split(",")
-                if _one(params, "emailCC")
+                email_from=param(params, "emailFrom") or "nna@localhost",
+                email_cc=(param(params, "emailCC") or "").split(",")
+                if param(params, "emailCC")
                 else None,
                 transport=self.mail_transport,
             )
@@ -528,8 +526,8 @@ class AnalyticsWebServer:
             # non-numeric result shapes can't be condition-checked
             pass
 
-    def _analytic(self, endpoint, path, query, params):
-        out_fmt = _one(params, "histogramOutput") or "json"
+    def _analytic(self, endpoint, params, *, query, **_):
+        out_fmt = param(params, "histogramOutput") or "json"
         if out_fmt not in _HISTOGRAM_OUTPUTS:
             raise ValueError(f"histogramOutput must be one of {_HISTOGRAM_OUTPUTS}")
         df = urlmod.run_url(self.engine, f"/{endpoint}?{query}", now_ms=self.now_ms)
@@ -555,7 +553,7 @@ class AnalyticsWebServer:
             return 200, "text/plain", "\n".join(
                 ",".join(str(v) for v in r) for r in rows
             ) + "\n"
-        if _one(params, "emailTo"):
+        if param(params, "emailTo"):
             # tiny aggregated result; the extra collect only happens when
             # the request actually asks for the email leg
             self._maybe_email(endpoint, params, df.collect())
@@ -621,47 +619,46 @@ class AnalyticsWebServer:
             held = self._sweep_held[name] = (key, load(path))
         return held[1]
 
-    def _suggestion(self, endpoint, params):
-        now = self.now_ms
-        if now is None:
-            import time
+    def _report(self, name, build, now_ms=None):
+        """The sweep's ``name`` report while fresh (``_sweep_cache``),
+        else ``build`` over the served table, passed ``now_ms`` when the
+        report is time-relative."""
+        df = self._sweep_cache(name, now_ms)
+        if df is not None:
+            return df
+        return build(self.engine.inodes, *(() if now_ms is None else (now_ms,)))
 
-            now = int(time.time() * 1000)
-        inodes = self.engine.inodes
+    def _suggestion(self, endpoint, params, **_):
+        now = self._now()
+        if endpoint == "suggestions":
+            # the reference's one-shot suggestions JSON: every file + dir
+            # scalar from the battery, one shared scan each
+            merged = {}
+            for name, build in (("fileScalars", suggestions.file_scalars),
+                                ("dirScalars", suggestions.dir_scalars)):
+                merged.update(self._report(name, build, now).collect()[0].asDict())
+            return 200, "application/json", json.dumps(merged, default=str)
         if endpoint == "fileAge":
-            df = self._sweep_cache("fileAge", now_ms=now)
-            if df is None:
-                df = suggestions.file_age_histogram(inodes, now)
+            df = self._report("fileAge", suggestions.file_age_histogram, now)
             return 200, "application/json", render.to_json(df)
         if endpoint == "fileTypes":
-            df = self._sweep_cache("fileTypeReport")
-            if df is None:
-                df = suggestions.file_type_report(inodes)
+            df = self._report("fileTypeReport", suggestions.file_type_report)
             return 200, "application/json", render.two_level_to_json(df)
         if endpoint == "quotas":
-            df = self._sweep_cache("quotaReport")
-            if df is None:
-                df = suggestions.quota_report(inodes)
+            df = self._report("quotaReport", suggestions.quota_report)
             return 200, "application/json", df.toPandas().to_json(orient="records")
         if endpoint == "directories":
-            depth = int(_one(params, "depth") or 3)
-            limit = int(_one(params, "limit") or 1000)
-            df = suggestions.top_directories(inodes, depth=depth, k=limit)
+            depth = int(param(params, "depth") or 3)
+            limit = int(param(params, "limit") or 1000)
+            df = suggestions.top_directories(self.engine.inodes, depth=depth, k=limit)
             return 200, "application/json", render.to_json(df)
         # /top | /bottom rankings over the per-user report (sweep-cached
         # when available — the ranking itself is a tiny sort over it)
-        metric = _one(params, "metric") or "numFiles"
-        limit = int(_one(params, "limit") or 10)
-        per_user = self._sweep_cache("perUser", now_ms=now)
-        if per_user is None:
-            per_user = suggestions.per_user_report(inodes, now)
+        metric = param(params, "metric") or "numFiles"
+        limit = int(param(params, "limit") or 10)
+        per_user = self._report("perUser", suggestions.per_user_report, now)
         df = suggestions.issue_ranking(per_user, metric, k=limit, top=endpoint == "top")
         return 200, "application/json", render.to_json(df)
-
-
-def _one(params: dict[str, list[str]], name: str) -> str | None:
-    vals = params.get(name)
-    return vals[-1] if vals else None
 
 
 #: rows per emitted chunk in a streamed path dump — small enough that a
@@ -710,18 +707,6 @@ class _PathStream:
                 buf = []
         if buf or not emitted:
             yield "\n".join(buf) + "\n"
-
-
-def _wall_ms() -> int:
-    import time
-
-    return int(time.time() * 1000)
-
-
-def _SUPPORTED_OPS():
-    from nnanalytics_spark.inode.operations import SUPPORTED
-
-    return SUPPORTED
 
 
 def _make_handler(server: AnalyticsWebServer):

@@ -1,4 +1,4 @@
-"""Rendering, /dump, rankings, cached-query registry tests."""
+"""Rendering, /dump, rankings, cached-query tests."""
 
 from __future__ import annotations
 
@@ -79,16 +79,30 @@ def test_issue_ranking(inodes, inodes_pdf):
 
 
 def test_cached_query_registry(engine, inodes_pdf):
-    reg = suggestions.CachedQueryRegistry()
-    reg.register(
-        "empties", Query(set="files", filters=[("fileSize", "eq", "0")], sums=["count"], now_ms=NOW)
-    )
-    reg.register(
-        "byUser", Query(set="files", type="user", sums=["count"], now_ms=NOW), shape="histogram"
-    )
-    out = reg.refresh(engine)
+    """/setCachedQuery registers a Query; /getCachedQuery answers it
+    through INodeEngine.run, shaped like the same query on /filter,
+    /histogram or /histogram2."""
+    from nnanalytics_spark.web.server import AnalyticsWebServer
+
+    srv = AnalyticsWebServer(engine, now_ms=NOW)
+
+    def call(endpoint, query):
+        status, _, body = srv.handle("GET", f"/{endpoint}", query, "", "tests")
+        assert status == 200, body
+        return body
+
+    call("setCachedQuery", "queryName=empties&set=files&filters=fileSize:eq:0&sum=count")
+    call("setCachedQuery", "queryName=byUser&set=files&type=user")
+    call("setCachedQuery", "queryName=biggest&set=files&find=max:fileSize")
+    call("setCachedQuery", "queryName=byUserGroup&set=files&type=user,group")
     f = inodes_pdf[inodes_pdf.type == "file"]
-    assert out["empties"].collect()[0][0] == int((f.fileSize == 0).sum())
-    assert len(out["byUser"].collect()) == f.user.nunique()
-    reg.unregister("empties")
-    assert reg.names() == ["byUser"]
+    assert call("getCachedQuery", "queryName=empties") == str(int((f.fileSize == 0).sum()))
+    assert len(json.loads(call("getCachedQuery", "queryName=byUser"))) == f.user.nunique()
+    # a find with no sum is the extremal row, as on /filter
+    biggest = json.loads(call("getCachedQuery", "queryName=biggest"))
+    assert list(biggest.values()) == [int(f.fileSize.max())]
+    # type=a,b groups on two levels, as on /histogram2
+    nested = json.loads(call("getCachedQuery", "queryName=byUserGroup"))
+    assert sum(len(inner) for inner in nested.values()) == len(f.groupby(["user", "group"]))
+    call("removeCachedQuery", "queryName=empties")
+    assert json.loads(call("cachedMaps", "")) == ["biggest", "byUser", "byUserGroup"]

@@ -26,6 +26,7 @@ from pyspark.sql.classic.dataframe import DataFrame
 from nnanalytics_spark.core import url as urlmod
 from nnanalytics_spark.inode import fixture
 from nnanalytics_spark.inode.engine import INodeEngine
+from nnanalytics_spark.sql import dialect
 
 NOW = fixture.NOW_MS
 # py4j releases a JVM object when its Python proxy is garbage-collected;
@@ -38,7 +39,7 @@ def _url(url):
 
 
 # (request class, build one request, ceiling); counts at the time of
-# writing: 31 30 37 26 125 62 26 31 29 23 12
+# writing: 31 30 37 26 125 62 26 31 29 23 12 26
 CASES = [
     ("filter_sum", _url("/filter?set=files&filters=user:eq:hdfs,fileSize:gt:10&sum=count"), 56),
     ("filter_find", _url("/filter?set=files&filters=user:eq:hdfs&find=max:fileSize"), 54),
@@ -53,6 +54,8 @@ CASES = [
     ("content_summary", lambda eng, path: eng.content_summary("/dir0"), 35),
     # /dump builds AND collects: its count includes the collect
     ("dump", lambda eng, path: eng.dump_inode(path), 18),
+    ("sql", lambda eng, path: dialect.execute_statements(
+        "SELECT user, COUNT(*) FROM files GROUP BY user", eng), 39),
 ]
 
 

@@ -40,10 +40,10 @@ def test_double_filter_and():
     assert p.query.filters == [("fileSize", "eq", "0"), ("user", "notEq", "pjeli")]
 
 
-def test_sum_with_filters():
+def test_sum_with_filters(engine):
     p = parse("SELECT SUM(diskspaceConsumed) FROM files WHERE fileSize = 0 AND user != pjeli")
     assert p.query.sums == ["diskspaceConsumed"]
-    assert p.shape == "sum"
+    assert engine.run(p.query).columns == ["diskspaceConsumed"]  # one scalar sum
 
 
 def test_count_star():
@@ -51,12 +51,12 @@ def test_count_star():
     assert p.query.sums == ["count"]
 
 
-def test_max_becomes_find():
+def test_max_becomes_find(engine):
     p = parse("SELECT MAX(diskspaceConsumed) FROM files WHERE fileSize > 0 AND user != pjeli")
     assert p.query.sums == []
     assert p.query.finds == ["max:diskspaceConsumed"]
     assert p.query.filters == [("fileSize", "gt", "0"), ("user", "notEq", "pjeli")]
-    assert p.shape == "find"
+    assert engine.run(p.query).columns == ["path", "diskspaceConsumed"]  # the extremal row
 
 
 def test_like_startswith():
@@ -81,9 +81,10 @@ def test_like_placement_rules():
     ]
 
 
-def test_group_by_count_with_filter():
+def test_group_by_count_with_filter(engine):
     p = parse("SELECT user,COUNT(*) FROM files WHERE fileSize = 0 GROUP BY user")
-    assert (p.query.type, p.query.sums, p.shape) == ("user", ["count"], "histogram")
+    assert (p.query.type, p.query.sums) == ("user", ["count"])
+    assert engine.run(p.query).columns == ["user", "count"]  # a one-level histogram
 
 
 def test_limit():

@@ -239,6 +239,48 @@ def test_cached_query_lifecycle_over_http(server, engine):
     assert status == 400
 
 
+def test_query_endpoints_reject_misspelt_parameters(engine):
+    """/submitOperation and /setCachedQuery parse their query like the
+    analytic endpoints: a misspelt parameter is a 400, never a query
+    with that parameter dropped (here: a delete of every file)."""
+    srv = AnalyticsWebServer(engine, now_ms=NOW)
+    status, _, body = srv.handle(
+        "GET", "/submitOperation", "operation=delete&set=files&filter=user:eq:etl", "", "tests"
+    )
+    assert status == 400 and "filter" in body
+    assert srv.operations.list_operations() == []
+    status, _, body = srv.handle(
+        "GET", "/setCachedQuery", "queryName=etl&set=files&filter=user:eq:etl", "", "tests"
+    )
+    assert status == 400 and "filter" in body
+    assert json.loads(srv.handle("GET", "/cachedMaps", "", "", "tests")[2]) == []
+
+
+def test_endpoints_lists_what_the_server_answers(engine):
+    """/endpoints is the router's own table: every listed name answers
+    something other than 404, and every routed name is listed; /login
+    and /logout are listed when authentication is on."""
+    from nnanalytics_spark.core.authn import LocalPasswordSet, SecurityManager
+    from nnanalytics_spark.web import server as web
+
+    srv = AnalyticsWebServer(engine, now_ms=NOW)
+    listed = json.loads(srv.handle("GET", "/endpoints", "", "", "tests")[2])
+    assert set(listed) == set(web._ROUTES)
+    assert {"config", "drop", "filterOps", "histogramOutputs", "system", "threads",
+            "truncate", "transforms"} <= set(listed)
+    for name in listed:
+        assert srv.handle("GET", f"/{name}", "", "", "tests")[0] != 404, name
+    assert srv.handle("GET", "/login", "", "", "tests")[0] == 404
+    sec = SecurityManager(local=LocalPasswordSet.from_plain({"alice": "pw"}))
+    secured = AnalyticsWebServer(engine, now_ms=NOW, security=sec)
+    status, _, body = secured.handle("GET", "/login", "username=alice&password=pw", "", "tests")[:3]
+    assert status == 200
+    bearer = {"authorization": "Bearer " + json.loads(body)["token"]}
+    listed = json.loads(secured.handle("GET", "/endpoints", "", "", "tests", bearer)[2])
+    assert set(listed) == set(web._ROUTES) | {"login", "logout"}
+    assert secured.handle("GET", "/logout", "", "", "tests", bearer)[0] == 200
+
+
 def test_suggestions_and_token(server):
     status, _, body = get(server, "/suggestions")
     assert status == 200
