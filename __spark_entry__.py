@@ -2255,6 +2255,85 @@ def q_all_pairs_blocked(spark, sf):
     )
 
 
+def _events_streams(spark: SparkSession, sf_dir: str, n: int) -> list[DataFrame]:
+    """`n` independent file streams over the events table (one source
+    each), with exact ts_ms/ts_us. FileStreamSource wants a directory;
+    glob-filter the sf dir down to the events table so the other tables'
+    files are never listed in."""
+    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    return [
+        _with_ts_cols(
+            spark.readStream.schema(raw_schema)
+            .option("pathGlobFilter", "events.parquet")
+            .parquet(sf_dir)
+        )
+        for _ in range(n)
+    ]
+
+
+def _segment_stream(
+    spark: SparkSession, segments: list[DataFrame], schema: str, name: str
+) -> DataFrame:
+    """Write each segment as one parquet file under a fresh temp dir and
+    stream them back in order, one segment per micro-batch."""
+    import os
+    import tempfile
+    import time
+
+    seg_dir = tempfile.mkdtemp(prefix=f"nna_{name}_seg_")
+    base_mtime = time.time() - 3600
+    for i, seg in enumerate(segments):
+        path = f"{seg_dir}/seg{i}"
+        seg.coalesce(1).write.parquet(path)
+        # FileStreamSource orders batches by mtime — pin it explicitly so
+        # segment arrival order never depends on write latency.
+        for fname in os.listdir(path):
+            os.utime(os.path.join(path, fname), (base_mtime + 10 * i,) * 2)
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{seg_dir}/*")
+    )
+
+
+def _drain(spark: SparkSession, writer):
+    """Start a streaming query, process everything available, stop it;
+    returns the stopped query (its recentProgress stays readable).
+
+    A stateful operator spawns one state-store instance (and an Arrow
+    Python worker) per shuffle partition, captured at stream start — a
+    vanilla 200-partition session pays ~25 s of worker fan-out for a
+    150-key state, and a stream-stream join pays it per side. Pin a
+    sane width for the stream, restore after."""
+    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    return q
+
+
+def _drain_to_parquet(spark: SparkSession, df: DataFrame, name: str) -> DataFrame:
+    """_drain `df` in append mode into a fresh parquet sink; returns the
+    sink read back, so a query over it hashes the streamed rows on disk."""
+    import tempfile
+
+    out_dir = tempfile.mkdtemp(prefix=f"nna_{name}_")
+    _drain(
+        spark,
+        df.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", f"{out_dir}/data")
+        .option("checkpointLocation", f"{out_dir}/ckpt"),
+    )
+    return spark.read.parquet(f"{out_dir}/data")
+
+
 def q_sessionization_parity(spark, sf):
     """Streaming sessionization (applyInPandasWithState interval-merge,
     streaming/stateful.py:67) over the events table as a file stream; the
@@ -2265,15 +2344,7 @@ def q_sessionization_parity(spark, sf):
     from nnanalytics_spark.streaming.stateful import streaming_sessionization
 
     _ship_package(spark)  # stateful fold is unpickled in Python workers
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    # FileStreamSource wants a directory; glob-filter the sf dir down to
-    # the events table so the other tables' files are never listed in.
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
-    ev = _with_ts_cols(stream).select("user_id", "ts_ms")
+    ev = _events_streams(spark, sf, 1)[0].select("user_id", "ts_ms")
     out = streaming_sessionization(ev)
 
     emissions: list[tuple[int, int, int]] = []
@@ -2282,20 +2353,7 @@ def q_sessionization_parity(spark, sf):
         for r in batch_df.collect():
             emissions.append((epoch_id, int(r["user_id"]), int(r["n_sessions"])))
 
-    # The stateful operator spawns one state-store instance (and an Arrow
-    # Python worker) per shuffle partition, captured at stream start — a
-    # vanilla 200-partition session pays ~25 s of worker fan-out for a
-    # 150-key state. Pin a sane width for the stream, restore after.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = out.writeStream.outputMode("update").foreachBatch(sink).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    _drain(spark, out.writeStream.outputMode("update").foreachBatch(sink))
     final: dict[int, int] = {}
     for _epoch, user, n in sorted(emissions):
         final[user] = n
@@ -2322,10 +2380,6 @@ def q_watermark_window_parity(spark, sf):
     Emitted set = windows with end <= max(ts)-H, counts over ALL events —
     exactly the oracle SQL. At 100 TB the foreachBatch collect becomes a
     parquet sink; state is bounded by |open windows|, not the corpus."""
-    import os
-    import tempfile
-    import time
-
     h_ms = 601_000  # not a multiple of the 300 s window so window ends
     win_ms = 300_000  # never tie the watermark (hash-stable boundary)
     ev = _events(spark, sf).select("event_id", "ts_ms", "event_type")
@@ -2335,25 +2389,17 @@ def q_watermark_window_parity(spark, sf):
         from nnanalytics_spark.core.smalldf import local_df
 
         return local_df(spark, [], "win long, event_type string, cnt long")
-    seg_dir = tempfile.mkdtemp(prefix="nna_wm_seg_")
-    segments = [
-        ev,
-        ev.filter(F.col("ts_ms") > max_ts - win_ms),
-        ev.filter((F.col("ts_ms") < max_ts - 3 * h_ms) & (F.col("event_id") % 97 == 0)),
-    ]
-    base_mtime = time.time() - 3600
-    for i, seg in enumerate(segments):
-        path = f"{seg_dir}/seg{i}"
-        seg.coalesce(1).write.parquet(path)
-        # FileStreamSource orders batches by mtime — pin it explicitly so
-        # segment arrival order never depends on write latency.
-        for name in os.listdir(path):
-            os.utime(os.path.join(path, name), (base_mtime + 10 * i,) * 2)
-
-    stream = (
-        spark.readStream.schema("event_id long, ts_ms long, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{seg_dir}/*")
+    stream = _segment_stream(
+        spark,
+        [
+            ev,
+            ev.filter(F.col("ts_ms") > max_ts - win_ms),
+            ev.filter(
+                (F.col("ts_ms") < max_ts - 3 * h_ms) & (F.col("event_id") % 97 == 0)
+            ),
+        ],
+        "event_id long, ts_ms long, event_type string",
+        "wm",
     )
     from nnanalytics_spark.streaming.refresh import windowed_event_counts
 
@@ -2364,7 +2410,6 @@ def q_watermark_window_parity(spark, sf):
         with_value=False,
     )
     rows: list[tuple[int, str, int]] = []
-    dropped = [0]
 
     def sink(batch_df, _epoch):
         for r in batch_df.collect():
@@ -2376,22 +2421,13 @@ def q_watermark_window_parity(spark, sf):
                 )
             )
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = out.writeStream.outputMode("append").foreachBatch(sink).start()
-        try:
-            q.processAllAvailable()
-            dropped[0] = sum(
-                op.get("numRowsDroppedByWatermark", 0)
-                for p in q.recentProgress
-                for op in p["stateOperators"]
-            )
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    q_watermark_window_parity.last_dropped = dropped[0]
+    q = _drain(spark, out.writeStream.outputMode("append").foreachBatch(sink))
+    dropped = sum(
+        op.get("numRowsDroppedByWatermark", 0)
+        for p in q.recentProgress
+        for op in p["stateOperators"]
+    )
+    q_watermark_window_parity.last_dropped = dropped
     from nnanalytics_spark.core.smalldf import local_df
 
     # None-safe sort key: a NULL event_type must not TypeError against
@@ -2414,38 +2450,72 @@ def q_stream_static_join_parity(spark, sf):
     broadcasts per micro-batch exactly as it would on a cluster.
     value_cents uses floor(value*100) so the double sum is
     integer-exact on both engines."""
-    import tempfile
-
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
+    events = _events_streams(spark, sf, 1)[0]
     dim = _t(spark, sf, "customer").select("c_custkey", "c_nationkey")
-    enriched = (
-        _with_ts_cols(stream)
-        .join(F.broadcast(dim), F.col("user_id") == F.col("c_custkey"))
-        .select("event_id", "user_id", "c_nationkey", "event_type", "value")
-    )
-    out_dir = tempfile.mkdtemp(prefix="nna_stream_join_")
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", f"{out_dir}/data")
-        .option("checkpointLocation", f"{out_dir}/ckpt")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    sunk = spark.read.parquet(f"{out_dir}/data")
+    enriched = events.join(
+        F.broadcast(dim), F.col("user_id") == F.col("c_custkey")
+    ).select("event_id", "user_id", "c_nationkey", "event_type", "value")
+    sunk = _drain_to_parquet(spark, enriched, "stream_join")
     return sunk.groupBy("c_nationkey", "event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.countDistinct("user_id").alias("n_users"),
         F.sum(F.floor(F.col("value") * 100)).alias("value_cents"),
     )
+
+
+def _buffered_stream_parity(
+    spark: SparkSession,
+    sf: str,
+    name: str,
+    residue: int,
+    value: F.Column,
+    sentinel: float | None,
+    operator: Callable[[DataFrame], DataFrame],
+    columns: list,
+    empty_schema: str,
+) -> DataFrame:
+    """The harness of the buffered-recursion parity rows: the users with
+    user_id % 4 == `residue` stream through `operator` as one segment,
+    then two far-future sentinel segments (user ids -1 and -2, value
+    `sentinel`) advance the lagging watermark so every real key flushes.
+    The parquet sink, sentinels dropped and projected to `columns`, is
+    what the oracle hashes. Every row crosses Python state and the sink
+    — a quarter of the users exercises the operator identically at a
+    quarter of the harness cost (the parity is about semantics, not
+    throughput)."""
+    ev = (
+        _events(spark, sf)
+        .filter(F.col("user_id") % 4 == residue)
+        .select("user_id", "event_id", "ts_ms", value.alias("value"))
+    )
+    max_ts = ev.agg(F.max("ts_ms")).collect()[0][0]
+    if max_ts is None:
+        # empty event log: no segments, no stream — typed empty parity
+        return spark.createDataFrame([], empty_schema)
+
+    def _sentinel(uid: int, ts: int) -> DataFrame:
+        # JVM-side literal row: createDataFrame(list) routes through a
+        # Python RDD and pays ~5 s of worker spin-up PER WRITE here
+        # (measured — it was 2/3 of this query's wall time)
+        return spark.range(1).select(
+            F.lit(uid).cast("long").alias("user_id"),
+            F.lit(uid).cast("long").alias("event_id"),
+            F.lit(ts).cast("long").alias("ts_ms"),
+            F.lit(sentinel).cast("double").alias("value"),
+        )
+
+    stream = _segment_stream(
+        spark,
+        [
+            ev,
+            _sentinel(-1, max_ts + 10 * 86_400_000),
+            _sentinel(-2, max_ts + 11 * 86_400_000),
+        ],
+        "user_id long, event_id long, ts_ms long, value double",
+        name,
+    )
+    sunk = _drain_to_parquet(spark, operator(stream), f"{name}_sink")
+    return sunk.filter(F.col("user_id") >= 0).select(*columns).orderBy("event_id")
 
 
 def q_stream_locf_parity(spark, sf):
@@ -2458,81 +2528,18 @@ def q_stream_locf_parity(spark, sf):
     fills. Two far-future sentinel segments advance the lagging
     watermark so every key flushes; the sink is then hash-checked
     against the batch LOCF oracle."""
-    import os
-    import tempfile
-    import time
-
     from nnanalytics_spark.streaming.stateful import streaming_forward_fill
 
-    # every row crosses Python state and the sink — a quarter of the
-    # users exercises the operator identically at a quarter of the
-    # harness cost (the parity is about semantics, not throughput)
-    ev = (
-        _events(spark, sf)
-        .filter(F.col("user_id") % 4 == 0)
-        .select(
-            "user_id",
-            "event_id",
-            "ts_ms",
-            F.when(F.col("event_id") % 4 == 0, F.col("value")).alias("value"),
-        )
-    )
-    max_ts = ev.agg(F.max("ts_ms")).collect()[0][0]
-    if max_ts is None:
-        # empty event log: no segments, no stream — typed empty parity
-        return spark.createDataFrame(
-            [], "event_id long, user_id long, value double, value_filled double"
-        )
-    seg_dir = tempfile.mkdtemp(prefix="nna_locf_seg_")
-    schema = "user_id long, event_id long, ts_ms long, value double"
-
-    def _sentinel(uid: int, ts: int) -> DataFrame:
-        # JVM-side literal row: createDataFrame(list) routes through a
-        # Python RDD and pays ~5 s of worker spin-up PER WRITE here
-        # (measured — it was 2/3 of this query's wall time)
-        return spark.range(1).select(
-            F.lit(uid).cast("long").alias("user_id"),
-            F.lit(uid).cast("long").alias("event_id"),
-            F.lit(ts).cast("long").alias("ts_ms"),
-            F.lit(None).cast("double").alias("value"),
-        )
-
-    sent1 = _sentinel(-1, max_ts + 10 * 86_400_000)
-    sent2 = _sentinel(-2, max_ts + 11 * 86_400_000)
-    base_mtime = time.time() - 3600
-    for i, seg in enumerate((ev, sent1, sent2)):
-        path = f"{seg_dir}/seg{i}"
-        seg.coalesce(1).write.parquet(path)
-        for name in os.listdir(path):
-            os.utime(os.path.join(path, name), (base_mtime + 10 * i,) * 2)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{seg_dir}/*")
-    )
-    out_dir = tempfile.mkdtemp(prefix="nna_locf_sink_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            streaming_forward_fill(stream)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", f"{out_dir}/data")
-            .option("checkpointLocation", f"{out_dir}/ckpt")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    sunk = spark.read.parquet(f"{out_dir}/data")
-    return (
-        sunk.filter(F.col("user_id") >= 0)
-        .select("event_id", "user_id", "value", "value_filled")
-        .orderBy("event_id")
+    return _buffered_stream_parity(
+        spark,
+        sf,
+        "locf",
+        residue=0,
+        value=F.when(F.col("event_id") % 4 == 0, F.col("value")),
+        sentinel=None,
+        operator=streaming_forward_fill,
+        columns=["event_id", "user_id", "value", "value_filled"],
+        empty_schema="event_id long, user_id long, value double, value_filled double",
     )
 
 
@@ -2553,82 +2560,30 @@ def q_stream_ewma_parity(spark, sf):
     oracle replaying the identical literal-by-literal recursion, plus the
     |x - s_prev| > 50 anomaly flags (the streaming anomaly primitive).
     Same segmented-parquet + far-future-sentinel harness as
-    stream_locf_parity; a quarter of the users exercises the operator at
-    a quarter of the harness cost."""
-    import os
-    import tempfile
-    import time
-
+    stream_locf_parity, over the %4==1 users."""
     from nnanalytics_spark.streaming.stateful import streaming_ewma
 
-    ev = (
-        _events(spark, sf)
-        .filter(F.col("user_id") % 4 == 1)
-        .select("user_id", "event_id", "ts_ms", "value")
-    )
-    max_ts = ev.agg(F.max("ts_ms")).collect()[0][0]
-    if max_ts is None:
-        # empty event log: no segments, no stream — typed empty parity
-        return spark.createDataFrame(
-            [], "user_id long, event_id long, value double, ewma double, is_anomaly int"
-        )
-    seg_dir = tempfile.mkdtemp(prefix="nna_ewma_seg_")
-    schema = "user_id long, event_id long, ts_ms long, value double"
-
-    def _sentinel(uid: int, ts: int) -> DataFrame:
-        return spark.range(1).select(
-            F.lit(uid).cast("long").alias("user_id"),
-            F.lit(uid).cast("long").alias("event_id"),
-            F.lit(ts).cast("long").alias("ts_ms"),
-            F.lit(0.0).cast("double").alias("value"),
-        )
-
-    sent1 = _sentinel(-1, max_ts + 10 * 86_400_000)
-    sent2 = _sentinel(-2, max_ts + 11 * 86_400_000)
-    base_mtime = time.time() - 3600
-    for i, seg in enumerate((ev, sent1, sent2)):
-        path = f"{seg_dir}/seg{i}"
-        seg.coalesce(1).write.parquet(path)
-        for name in os.listdir(path):
-            os.utime(os.path.join(path, name), (base_mtime + 10 * i,) * 2)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{seg_dir}/*")
-    )
-    out_dir = tempfile.mkdtemp(prefix="nna_ewma_sink_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            streaming_ewma(stream, alpha=_EWMA_ALPHA)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", f"{out_dir}/data")
-            .option("checkpointLocation", f"{out_dir}/ckpt")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    sunk = spark.read.parquet(f"{out_dir}/data")
-    # prev_s is NaN on each key's first row (vs the oracle's NULL) —
-    # fold it into the anomaly flag instead of emitting it raw
-    return (
-        sunk.filter(F.col("user_id") >= 0)
-        .select(
+    return _buffered_stream_parity(
+        spark,
+        sf,
+        "ewma",
+        residue=1,
+        value=F.col("value"),
+        sentinel=0.0,
+        operator=lambda stream: streaming_ewma(stream, alpha=_EWMA_ALPHA),
+        # prev_s is NaN on each key's first row (vs the oracle's NULL) —
+        # fold it into the anomaly flag instead of emitting it raw
+        columns=[
             "user_id",
             "event_id",
             "value",
             F.round("ewma", 6).alias("ewma"),
-            F.when(
-                F.abs(F.col("value") - F.col("prev_s")) > 50, 1
-            ).otherwise(0).cast("int").alias("is_anomaly"),
-        )
-        .orderBy("event_id")
+            F.when(F.abs(F.col("value") - F.col("prev_s")) > 50, 1)
+            .otherwise(0)
+            .cast("int")
+            .alias("is_anomaly"),
+        ],
+        empty_schema="user_id long, event_id long, value double, ewma double, is_anomaly int",
     )
 
 
@@ -2642,76 +2597,26 @@ def q_stream_holt_parity(spark, sf):
     against a recursive-CTE oracle replaying the identical
     literal-by-literal chain. Same segmented-parquet +
     far-future-sentinel harness as stream_ewma_parity; %4==2 users."""
-    import os
-    import tempfile
-    import time
-
     from nnanalytics_spark.streaming.stateful import streaming_holt
 
-    ev = (
-        _events(spark, sf)
-        .filter(F.col("user_id") % 4 == 2)
-        .select("user_id", "event_id", "ts_ms", "value")
-    )
-    max_ts = ev.agg(F.max("ts_ms")).collect()[0][0]
-    if max_ts is None:
-        # empty event log: no segments, no stream — typed empty parity
-        return spark.createDataFrame(
-            [], "user_id long, event_id long, value double, level double, trend double"
-        )
-    seg_dir = tempfile.mkdtemp(prefix="nna_holt_seg_")
-    schema = "user_id long, event_id long, ts_ms long, value double"
-
-    def _sentinel(uid: int, ts: int) -> DataFrame:
-        return spark.range(1).select(
-            F.lit(uid).cast("long").alias("user_id"),
-            F.lit(uid).cast("long").alias("event_id"),
-            F.lit(ts).cast("long").alias("ts_ms"),
-            F.lit(0.0).cast("double").alias("value"),
-        )
-
-    sent1 = _sentinel(-1, max_ts + 10 * 86_400_000)
-    sent2 = _sentinel(-2, max_ts + 11 * 86_400_000)
-    base_mtime = time.time() - 3600
-    for i, seg in enumerate((ev, sent1, sent2)):
-        path = f"{seg_dir}/seg{i}"
-        seg.coalesce(1).write.parquet(path)
-        for name in os.listdir(path):
-            os.utime(os.path.join(path, name), (base_mtime + 10 * i,) * 2)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{seg_dir}/*")
-    )
-    out_dir = tempfile.mkdtemp(prefix="nna_holt_sink_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            streaming_holt(stream, alpha=_HOLT_ALPHA, beta=_HOLT_BETA)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", f"{out_dir}/data")
-            .option("checkpointLocation", f"{out_dir}/ckpt")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    sunk = spark.read.parquet(f"{out_dir}/data")
-    return (
-        sunk.filter(F.col("user_id") >= 0)
-        .select(
+    return _buffered_stream_parity(
+        spark,
+        sf,
+        "holt",
+        residue=2,
+        value=F.col("value"),
+        sentinel=0.0,
+        operator=lambda stream: streaming_holt(
+            stream, alpha=_HOLT_ALPHA, beta=_HOLT_BETA
+        ),
+        columns=[
             "user_id",
             "event_id",
             "value",
             F.round("level", 6).alias("level"),
             F.round("trend", 6).alias("trend"),
-        )
-        .orderBy("event_id")
+        ],
+        empty_schema="user_id long, event_id long, value double, level double, trend double",
     )
 
 
@@ -3607,43 +3512,15 @@ def q_stream_dedup_parity(spark, sf):
     proves the deduplicated stream on disk equals the batch-distinct
     oracle. State is keyed by (id, time) and evicted by the watermark:
     bounded by the lateness horizon, not the stream length."""
-    import tempfile
-
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    def _src():
-        return (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf)
-        )
-
-    doubled = _with_ts_cols(_src()).unionByName(_with_ts_cols(_src()))
+    first, second = _events_streams(spark, sf, 2)
+    doubled = first.unionByName(second)
     deduped = (
         doubled.withColumn("wm", F.timestamp_millis(F.col("ts_ms")))
         .withWatermark("wm", "1 hour")
         .dropDuplicates(["event_id", "wm"])
         .select("event_id", "user_id", "event_type", "value")
     )
-    out_dir = tempfile.mkdtemp(prefix="nna_stream_dedup_")
-    # dropDuplicates keeps one state store per shuffle partition — same
-    # fan-out economics as sessionization_parity; pin for the stream
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", f"{out_dir}/data")
-            .option("checkpointLocation", f"{out_dir}/ckpt")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    sunk = spark.read.parquet(f"{out_dir}/data")
+    sunk = _drain_to_parquet(spark, deduped, "stream_dedup")
     return (
         sunk.groupBy("event_type")
         .agg(
@@ -4496,15 +4373,12 @@ def q_stream_rollup_parity(spark, sf):
         agg.write.mode("overwrite").parquet(new_path)
         state["path"] = new_path
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .start()
+    _drain(
+        spark,
+        stream.writeStream.foreachBatch(fold).option(
+            "checkpointLocation", f"{base}/ckpt"
+        ),
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     final = spark.read.parquet(state["path"])
     return final.select(
         "event_type", "cnt", F.col("sum_value").cast("double").alias("sum_value")
@@ -4523,20 +4397,9 @@ def q_stream_stream_join_parity(spark, sf):
     aggregates the SINK, so the hash covers the streamed join output on
     disk against the closed-form batch join the oracle replays with
     exact millisecond arithmetic."""
-    import tempfile
-
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-
-    def _src():
-        return (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf)
-        )
-
+    click_src, purchase_src = _events_streams(spark, sf, 2)
     clicks = (
-        _with_ts_cols(_src())
-        .filter(F.col("event_type") == "click")
+        click_src.filter(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
             F.timestamp_millis(F.col("ts_ms")).alias("cts"),
@@ -4544,8 +4407,7 @@ def q_stream_stream_join_parity(spark, sf):
         .withWatermark("cts", "1 hour")
     )
     purchases = (
-        _with_ts_cols(_src())
-        .filter(F.col("event_type") == "purchase")
+        purchase_src.filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("p_id"),
             F.col("user_id").alias("p_user"),
@@ -4561,28 +4423,7 @@ def q_stream_stream_join_parity(spark, sf):
         ),
         "inner",
     ).select("p_id", "p_user", "p_value")
-    out_dir = tempfile.mkdtemp(prefix="nna_ss_join_")
-    # stream-stream joins keep one state store PER SIDE per shuffle
-    # partition, captured at stream start — the sessionization_parity
-    # pinning, doubled in weight here (measured 6.1 s -> the pin is the
-    # difference between 64 and 16 state stores + Arrow workers)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", f"{out_dir}/data")
-            .option("checkpointLocation", f"{out_dir}/ckpt")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    sunk = spark.read.parquet(f"{out_dir}/data")
+    sunk = _drain_to_parquet(spark, joined, "ss_join")
     return sunk.agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.countDistinct("p_id").alias("n_purchases"),

@@ -64,7 +64,6 @@ SPACE_EDGES = [
     ("512 MB", 512 * MB),
     ("1 GB", GB),
 ]
-SPACE_KEYS = [label for label, _ in SPACE_EDGES] + ["1 GB+"]
 
 
 def space_bucket(size_col: Column) -> Column:
@@ -88,7 +87,6 @@ MEMORY_EDGES = [
     ("32 KB", 32 * KB),
     ("64 KB", 64 * KB),
 ]
-MEMORY_KEYS = [label for label, _ in MEMORY_EDGES] + ["64 KB+"]
 
 
 def memory_bucket(size_col: Column) -> Column:
@@ -110,7 +108,6 @@ STORAGE_POLICIES = {
     2: "COLD",
     1: "PROVIDED",
 }
-STORAGE_KEYS = list(STORAGE_POLICIES.values())
 
 
 def storage_type_bucket(policy_id_col: Column) -> Column:
@@ -209,8 +206,6 @@ FILETYPE_SUFFIX = {
     ".inprogress": "INPROGRESS",
     ".INPROGRESS": "INPROGRESS",
 }
-FILETYPE_KEYS = sorted({"UNKNOWN", *FILETYPE_EQUALS.values(), *FILETYPE_STARTSWITH.values(),
-                        *FILETYPE_SUFFIX.values()})
 
 
 def _literal_map(pairs: dict[str, str]) -> Column:

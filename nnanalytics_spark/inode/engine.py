@@ -28,11 +28,6 @@ from nnanalytics_spark.inode import bins
 from nnanalytics_spark.inode import columns as reg
 from nnanalytics_spark.inode import subtree
 
-# sums whose per-inode value depends on fileReplica — the transform hook
-# (Transforms.java:206-230) rewrites these consistently.
-_REPLICA_DERIVED = {"numReplicas", "diskspaceConsumed"}
-
-
 class INodeEngine:
     """Query surface over one inode DataFrame (stored schema, fixture.py).
 

@@ -89,9 +89,6 @@ def _decode_audio(payload: bytes, kind: str) -> list[float]:
     return codecs.wav_features(payload)
 
 
-DECODERS = {"image": _decode_image, "audio": _decode_audio, "video": _decode_video}
-
-
 def _decode_once(kind: str, payload: bytes | None):
     """(feature, n_content, content_sum) from ONE container decode —
     the decode is the dominant kernel cost, so feature extraction and

@@ -238,34 +238,47 @@ def all_pairs_above_blocked(
     sized for executor memory). Nothing touches the driver but the block
     count.
     """
-    import numpy as np
-    import pandas as pd
-
     # NULL-vector contract: a row with no embedding cannot participate
     # in similarity — dropped here, at the operator entry
     df = df.filter(F.col(vec_col).isNotNull())
-    spark = df.sparkSession
     src = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
     n = src.count()
     n_blocks = max(1, math.ceil(n / rows_per_block))
+    # the kernel input is ~n·(B+1) replicated rows
+    return _block_pair_kernel(src, threshold, n_blocks, [], n * (n_blocks + 1))
+
+
+def _block_pair_kernel(
+    src: DataFrame, threshold: float, n_blocks: int, keys: list, approx_rows: int
+) -> DataFrame:
+    """The block-decomposed pair kernel behind all_pairs_above_blocked and
+    within_cell_pairs_above: (keys..., id, v) rows hash into ``n_blocks``
+    blocks, every unordered block pair (bl ≤ br) within a ``keys`` group
+    becomes one applyInPandas group holding the two blocks' rows, and a
+    BLAS matmul emits each (id_a < id_b) pair with round(cosine, 6) ≥
+    ``threshold`` exactly once. ``approx_rows`` sizes the kernel-input
+    shuffle (_pin_kernel_width)."""
+    import numpy as np
+    import pandas as pd
+
     blocked = src.withColumn(
         "block", F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int")
     )
-    bp = _block_pairs(spark, n_blocks)
+    bp = _block_pairs(src.sparkSession, n_blocks)
     left = blocked.join(F.broadcast(bp), F.col("block") == F.col("bl")).select(
-        "bl", "br", F.lit(0).alias("side"), "id", "v"
+        *keys, "bl", "br", F.lit(0).alias("side"), "id", "v"
     )
     right = (
         blocked.join(F.broadcast(bp), F.col("block") == F.col("br"))
         .filter(F.col("bl") != F.col("br"))
-        .select("bl", "br", F.lit(1).alias("side"), "id", "v")
+        .select(*keys, "bl", "br", F.lit(1).alias("side"), "id", "v")
     )
     both = left.unionByName(right)
 
     def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        bl, br = key
+        bl, br = key[-2:]
         if bl == br:
             a = b = pdf
         else:
@@ -297,14 +310,15 @@ def all_pairs_above_blocked(
         return pd.DataFrame({"id_a": ia, "id_b": ib, "cos_sim": s})
 
     # pin the kernel-input shuffle width like the other grouped Arrow
-    # kernels (ADVICE r9): ``both`` holds ~n·(B+1) replicated rows, and
-    # without the pin the session's lowered AQE coalescing floor can
-    # re-fan this small compute-dense shuffle into many near-empty
-    # Arrow tasks (the link_negatives tail regression fixed in r9-opt
-    # batch 8). The user-numbered repartition on the group keys
-    # satisfies the groupBy's distribution, so no second exchange.
-    both = _pin_kernel_width(both, n * (n_blocks + 1), ["bl", "br"])
-    return both.groupBy("bl", "br").applyInPandas(
+    # kernels (ADVICE r9): without the pin the session's lowered AQE
+    # coalescing floor can re-fan this small compute-dense shuffle into
+    # many near-empty Arrow tasks (the link_negatives tail regression
+    # fixed in r9-opt batch 8). The user-numbered repartition on the
+    # group keys satisfies the groupBy's distribution, so no second
+    # exchange.
+    group = [*keys, "bl", "br"]
+    both = _pin_kernel_width(both, approx_rows, group)
+    return both.groupBy(*group).applyInPandas(
         kernel, "id_a long, id_b long, cos_sim double"
     )
 
@@ -440,6 +454,22 @@ def ivf_build(
     return path
 
 
+def _scan_probed_cells(
+    spark, path: str, probe_cells: list[int], query_vec: list[float], k: int, id_col: str
+) -> DataFrame:
+    """Top-k by (round(cos, 6) DESC, id ASC) over only the probed cells'
+    partitions of an IVF index's assignments."""
+    candidates = spark.read.parquet(f"{path}/assignments").filter(
+        F.col("cell").isin(probe_cells)
+    )
+    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
+    scored = candidates.select(
+        F.col("id").alias(id_col),
+        F.round(cosine(F.col("v"), qcol), 6).alias("cos_sim"),
+    )
+    return scored.orderBy(F.col("cos_sim").desc(), id_col).limit(k)
+
+
 def ivf_search(
     spark,
     path: str,
@@ -462,16 +492,7 @@ def ivf_search(
     q = np.asarray(query_vec, dtype=np.float64)
     cent_sims = (centroids @ q) / (np.linalg.norm(centroids, axis=1) * np.linalg.norm(q))
     probe_cells = [int(c) for c in np.argsort(-cent_sims)[:nprobe]]
-
-    candidates = spark.read.parquet(f"{path}/assignments").filter(
-        F.col("cell").isin(probe_cells)
-    )
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = candidates.select(
-        F.col("id").alias(id_col),
-        F.round(cosine(F.col("v"), qcol), 6).alias("cos_sim"),
-    )
-    return scored.orderBy(F.col("cos_sim").desc(), id_col).limit(k)
+    return _scan_probed_cells(spark, path, probe_cells, query_vec, k, id_col)
 
 
 def ivf_topk(
@@ -932,59 +953,9 @@ def within_cell_pairs_above(
     to pick a block count (r10-opt; the emitted pair set is invariant to
     n_blocks, an over-estimate only splits blocks finer).
     """
-    import numpy as np
-    import pandas as pd
-
-    spark = assigned.sparkSession
     n = n_hint if n_hint is not None else assigned.count()
     n_blocks = max(1, math.ceil(n / rows_per_block))
-    blocked = assigned.withColumn(
-        "block", F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int")
-    )
-    bp = _block_pairs(spark, n_blocks)
-    left = blocked.join(F.broadcast(bp), F.col("block") == F.col("bl")).select(
-        "cell", "bl", "br", F.lit(0).alias("side"), "id", "v"
-    )
-    right = (
-        blocked.join(F.broadcast(bp), F.col("block") == F.col("br"))
-        .filter(F.col("bl") != F.col("br"))
-        .select("cell", "bl", "br", F.lit(1).alias("side"), "id", "v")
-    )
-    both = left.unionByName(right)
-
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        _cell, bl, br = key
-        if bl == br:
-            a = b = pdf
-        else:
-            a = pdf[pdf["side"] == 0]
-            b = pdf[pdf["side"] == 1]
-        if a.empty or b.empty:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []}).astype(
-                {"id_a": "int64", "id_b": "int64", "cos_sim": "float64"}
-            )
-        a_ids = a["id"].to_numpy()
-        b_ids = b["id"].to_numpy()
-        a_mat = np.array(list(a["v"]), dtype=np.float64)
-        b_mat = np.array(list(b["v"]), dtype=np.float64)
-        a_n = np.sqrt((a_mat * a_mat).sum(axis=1))
-        b_n = np.sqrt((b_mat * b_mat).sum(axis=1))
-        sims = np.round((a_mat @ b_mat.T) / np.outer(a_n, b_n), 6)
-        ka, kb = np.nonzero((sims >= threshold) & (a_ids[:, None] < b_ids[None, :]))
-        ia, ib, s = a_ids[ka], b_ids[kb], sims[ka, kb]
-        if bl != br:
-            kb2, ka2 = np.nonzero(
-                (sims.T >= threshold) & (b_ids[:, None] < a_ids[None, :])
-            )
-            ia = np.concatenate([ia, b_ids[kb2]])
-            ib = np.concatenate([ib, a_ids[ka2]])
-            s = np.concatenate([s, sims.T[kb2, ka2]])
-        return pd.DataFrame({"id_a": ia, "id_b": ib, "cos_sim": s})
-
-    both = _pin_kernel_width(both, n * n_blocks, ["cell", "bl", "br"])
-    return both.groupBy("cell", "bl", "br").applyInPandas(
-        kernel, "id_a long, id_b long, cos_sim double"
-    )
+    return _block_pair_kernel(assigned, threshold, n_blocks, ["cell"], n * n_blocks)
 
 
 def semdedup(
@@ -1321,16 +1292,7 @@ def ivf_search_rounded(
     # sort by (-sim, cell): np.lexsort keys are last-significant-first
     order = np.lexsort((np.arange(len(cent_sims)), -cent_sims))
     probe_cells = [int(c) for c in order[:nprobe]]
-
-    candidates = spark.read.parquet(f"{path}/assignments").filter(
-        F.col("cell").isin(probe_cells)
-    )
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = candidates.select(
-        F.col("id").alias(id_col),
-        F.round(cosine(F.col("v"), qcol), 6).alias("cos_sim"),
-    )
-    return scored.orderBy(F.col("cos_sim").desc(), id_col).limit(k)
+    return _scan_probed_cells(spark, path, probe_cells, query_vec, k, id_col)
 
 
 def _blocked_local_topk(

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -868,6 +868,33 @@ def srm_check(
     )
 
 
+def _daily_count_moments(
+    events: DataFrame, group: str, ts_col: str
+) -> tuple[DataFrame, Column, Column]:
+    """Per group of `events`: the (g, n_days, sx, sxx) aggregate of its
+    DAILY event counts — exact integer counts, Σx/Σx² in DECIMAL — and
+    the mean and sample-variance columns over it (n·Σx² − (Σx)² over
+    n(n−1), doubles only in the finished formula). A single observed
+    day has no sample variance: var is NULL (the module's
+    insufficient-units contract), never an ANSI error."""
+    daily = (
+        events.select(F.col(group).alias("g"), F.expr(f"{ts_col} div 86400000").alias("day"))
+        .groupBy("g", "day")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    dec = "decimal(38,0)"
+    m = daily.groupBy("g").agg(
+        F.count(F.lit(1)).alias("n_days"),
+        F.sum(F.col("c").cast(dec)).alias("sx"),
+        F.sum(F.col("c").cast(dec) * F.col("c").cast(dec)).alias("sxx"),
+    )
+    n = F.col("n_days").cast("double")
+    sx, sxx = F.col("sx").cast("double"), F.col("sxx").cast("double")
+    mean = sx / n
+    var = F.when(F.col("n_days") >= 2, (n * sxx - sx * sx) / (n * (n - 1)))
+    return m, mean, var
+
+
 def overdispersion(
     events: DataFrame,
     group: str = "event_type",
@@ -880,24 +907,7 @@ def overdispersion(
     integers, the sample variance comes from exact Σx/Σx² moments
     (n·Σx² − (Σx)² over n(n−1) — the module's moment discipline), and
     only the final ratios are doubles, rounded to 6."""
-    daily = (
-        events.select(F.col(group).alias("g"), F.expr(f"{ts_col} div 86400000").alias("day"))
-        .groupBy("g", "day")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    dec = "decimal(38,0)"
-    m = daily.groupBy("g").agg(
-        F.count(F.lit(1)).alias("n_days"),
-        F.sum(F.col("c").cast(dec)).alias("sx"),
-        F.sum(F.col("c").cast(dec) * F.col("c").cast(dec)).alias("sxx"),
-    )
-    n, sx, sxx = (F.col("n_days").cast("double"), F.col("sx").cast("double"), F.col("sxx").cast("double"))
-    mean = sx / n
-    # a single observed day has no sample variance — NULL var/dispersion
-    # (the module's insufficient-units contract), never an ANSI error
-    var = F.when(
-        F.col("n_days") >= 2, (n * sxx - sx * sx) / (n * (n - 1))
-    )
+    m, mean, var = _daily_count_moments(events, group, ts_col)
     return m.select(
         F.col("g").alias(group),
         "n_days",
@@ -1881,25 +1891,8 @@ def negbinom_fit(
     DECIMAL, doubles only in the finished formula); groups with
     var ≤ mean (no overdispersion to model) report NULL fit columns
     rather than a garbage negative r."""
-    daily = (
-        events.select(
-            F.col(group).alias("g"), F.expr(f"{ts_col} div 86400000").alias("day")
-        )
-        .groupBy("g", "day")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    dec = "decimal(38,0)"
-    m = daily.groupBy("g").agg(
-        F.count(F.lit(1)).alias("n_days"),
-        F.sum(F.col("c").cast(dec)).alias("sx"),
-        F.sum(F.col("c").cast(dec) * F.col("c").cast(dec)).alias("sxx"),
-    )
-    n = F.col("n_days").cast("double")
-    sx, sxx = F.col("sx").cast("double"), F.col("sxx").cast("double")
-    mean = sx / n
-    # a single observed day has no sample variance — NULL var and NULL
-    # fit columns (the insufficient-units contract), never an ANSI error
-    var = F.when(F.col("n_days") >= 2, (n * sxx - sx * sx) / (n * (n - 1)))
+    m, mean, var = _daily_count_moments(events, group, ts_col)
+    # a NULL var (a single observed day) makes every fit column NULL
     over = var > mean
     r = mean * mean / (var - mean)
     p = mean / var

@@ -1,10 +1,8 @@
-"""Table loaders for the driver testdata + fsimage-shaped sources.
+"""Table loaders for fsimage-shaped sources.
 
 The reference ingests an HDFS FSImage checkpoint (NameNodeLoader.java:319-396)
 and keeps it fresh by tailing the edit log. The Spark-native equivalents:
 
-- ``load_tables``: batch parquet reads of the driver-generated star schema
-  (TESTDATA.md) — predicate pushdown and column pruning reach the scan.
 - ``read_fsimage_csv``: an `hdfs oiv -p Delimited` export → inode
   DataFrame in the stored-schema layout (fixture.py). This is how a real
   deployment feeds this engine from a production NameNode, no reflection
@@ -24,36 +22,6 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, register_views: bool = True) -> dict[str, DataFrame]:
-    out = {}
-    for name in TABLES:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if register_views:
-            df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
-# `hdfs oiv -p Delimited` column order (public Hadoop OIV tool output).
-_OIV_COLUMNS = [
-    "Path", "Replication", "ModificationTime", "AccessTime", "PreferredBlockSize",
-    "BlocksCount", "FileSize", "NSQUOTA", "DSQUOTA", "Permission", "UserName", "GroupName",
-]
 
 
 def read_fsimage_csv(spark: SparkSession, path: str, sep: str = "\t") -> DataFrame:

@@ -133,12 +133,7 @@ def _split_where(where: str) -> list[str]:
     return [p.replace(sentinel, "AND") for p in re.split(r"\bAND\b", masked, flags=re.IGNORECASE)]
 
 
-@dataclass
-class ParsedSql:
-    query: Query
-
-
-def parse_select(statement: str, session: SqlSession | None = None) -> ParsedSql:
+def parse_select(statement: str, session: SqlSession | None = None) -> Query:
     session = session or SqlSession()
     sql = statement.strip().rstrip(";").strip()
     m = re.match(
@@ -195,7 +190,7 @@ def parse_select(statement: str, session: SqlSession | None = None) -> ParsedSql
         elif re.search(r"\bASC\b", order, re.IGNORECASE):
             sort = "asc"
 
-    query = Query(
+    return Query(
         set=m.group("table"),
         filters=filters,
         type=group_key,
@@ -206,7 +201,6 @@ def parse_select(statement: str, session: SqlSession | None = None) -> ParsedSql
         parent_dir_depth=session.parent_dir_depth,
         time_range=session.time_range,
     )
-    return ParsedSql(query=query)
 
 
 def show_tables() -> list[str]:
@@ -234,7 +228,7 @@ def execute(statement: str, engine, session: SqlSession | None = None) -> DataFr
         return describe(desc.group(1))
     if session.execute_set(statement):
         return []
-    return engine.run(parse_select(statement, session).query)
+    return engine.run(parse_select(statement, session))
 
 
 def _split_statements(text: str) -> list[str]:

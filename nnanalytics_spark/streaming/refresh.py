@@ -6,7 +6,7 @@ mutations (asserted by testUpdateSeen, TestWithMiniClusterBase.java:207-228).
 
 Spark-native equivalents, in preference order:
 
-1. ``SnapshotTable`` — re-read the inode table on demand / on interval.
+1. ``SnapshotTable`` — re-read the inode table on demand.
    Immutable snapshot per refresh: queries get clean point-in-time
    semantics (the reference reads live mutating objects under an optional
    lock — we get strictly better consistency for free).
@@ -21,7 +21,6 @@ Spark-native equivalents, in preference order:
 from __future__ import annotations
 
 import threading
-import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,17 +53,6 @@ class SnapshotTable:
             self._version += 1
             return self._df
 
-    def refresh_every(self, seconds: float, stop_event: threading.Event) -> threading.Thread:
-        """Background refresh loop — the 'standby services' analog."""
-
-        def loop() -> None:
-            while not stop_event.wait(seconds):
-                self.refresh()
-
-        thread = threading.Thread(target=loop, daemon=True, name="inode-refresh")
-        thread.start()
-        return thread
-
 
 def apply_changelog_batch(current: DataFrame, batch: DataFrame) -> DataFrame:
     """Apply one change-log micro-batch: op='delete' rows remove by id,
@@ -80,8 +68,10 @@ class ChangeLogTailer:
     """Structured Streaming tailer over an append-only change-log dir.
 
     Each micro-batch folds into an in-memory current snapshot via
-    ``apply_changelog_batch``; ``query_count(...)`` run before/after a new
-    segment lands reproduces the reference's testUpdateSeen assertion.
+    ``apply_changelog_batch``. The same query over ``current`` before and
+    after a new segment lands (with ``process_all()`` between) reproduces
+    the reference's testUpdateSeen assertion
+    (tests/test_streaming.py::test_changelog_tailer_update_seen).
     """
 
     def __init__(self, spark: SparkSession, base: DataFrame, changelog_dir: str, schema):

@@ -23,7 +23,7 @@ so state doesn't grow with stream lifetime.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import numpy as np
@@ -129,40 +129,35 @@ def streaming_sessionization(
     )
 
 
-_FF_OUTPUT = (
-    "user_id long, event_id long, ts_ms long, value double, value_filled double"
-)
 # buffered rows awaiting their key's horizon; NaN encodes a NULL value
 # (state arrays round-trip through Arrow, which has no null-in-list
 # guarantee across versions — NaN is unambiguous here because real
 # observations are finite doubles)
-_FF_STATE = "ids array<long>, tss array<long>, vals array<double>"
+_BUFFER_STATE = "ids array<long>, tss array<long>, vals array<double>"
 
 
-def streaming_forward_fill(
+def _flush_in_event_time(
     events: DataFrame,
-    user_col: str = "user_id",
-    id_col: str = "event_id",
-    ts_col: str = "ts_ms",
-    value_col: str = "value",
+    user_col: str,
+    id_col: str,
+    ts_col: str,
+    value_col: str,
+    recurse: Callable[[np.ndarray], dict[str, np.ndarray]],
+    output_schema: str,
 ) -> DataFrame:
-    """EXACT last-observation-carried-forward over a stream — including
-    out-of-order arrivals, which the naive "fill from the latest seen
-    observation" streaming version gets wrong (an observation arriving
-    late would leave earlier-emitted gaps stale). Rows buffer in per-key
-    state until the event-time watermark passes the key's last activity,
-    then the whole key emits in event-time order with the same
-    (ts, event_id)-ordered LOCF the batch operator applies — asserted
-    equivalent to behavior.forward_fill in tests/test_streaming.py.
+    """Run a per-key recursion over a stream in EVENT-TIME order, exactly,
+    whatever the arrival order inside the watermark horizon.
 
-    State is bounded by the watermark horizon per key (rows older than
-    the watermark can no longer be reordered and are flushed); emission
-    is per-key-complete, the right unit for sink-side consumers that
-    need the repaired series. Same applyInPandasWithState shape as
-    streaming_sessionization: EventTimeTimeout eviction, Arrow-batched
-    updates."""
-    import math
-
+    Rows buffer in per-key state until the event-time watermark passes
+    the key's last activity; then the key's rows sort on (ts, event_id)
+    and ``recurse`` maps their values to the extra output columns (named
+    and typed by ``output_schema``), emitted beside user_id, event_id,
+    ts_ms and value. State is bounded by the watermark horizon per key
+    (rows older than the watermark can no longer be reordered and are
+    flushed); emission is per-key-complete, the right unit for sink-side
+    consumers that need the repaired series. Same applyInPandasWithState
+    shape as streaming_sessionization: EventTimeTimeout eviction,
+    Arrow-batched updates."""
     src = events.select(
         F.col(user_col).alias("user_id"),
         F.col(id_col).alias("event_id"),
@@ -177,9 +172,6 @@ def streaming_forward_fill(
         if state.hasTimedOut:
             ids, tss, vals = state.get
             state.remove()
-            # vectorized flush: lexsort on (ts, id), then pandas ffill is
-            # exactly (ts, event_id)-ordered LOCF; NaN survives Arrow as
-            # the null the output schema expects
             a_ids = np.asarray(ids, dtype=np.int64)
             a_tss = np.asarray(tss, dtype=np.int64)
             a_vals = np.asarray(vals, dtype=np.float64)
@@ -191,7 +183,7 @@ def streaming_forward_fill(
                     "event_id": a_ids,
                     "ts_ms": a_tss,
                     "value": a_vals,
-                    "value_filled": pd.Series(a_vals).ffill().to_numpy(),
+                    **recurse(a_vals),
                 }
             )
             return
@@ -217,18 +209,38 @@ def streaming_forward_fill(
 
     return src.groupBy("user_id").applyInPandasWithState(
         fold,
-        outputStructType=_FF_OUTPUT,
-        stateStructType=_FF_STATE,
+        outputStructType=(
+            f"user_id long, event_id long, ts_ms long, value double, {output_schema}"
+        ),
+        stateStructType=_BUFFER_STATE,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
 
-_EWMA_OUTPUT = (
-    "user_id long, event_id long, ts_ms long, value double, "
-    "ewma double, prev_s double"
-)
-_EWMA_STATE = "ids array<long>, tss array<long>, vals array<double>"
+def streaming_forward_fill(
+    events: DataFrame,
+    user_col: str = "user_id",
+    id_col: str = "event_id",
+    ts_col: str = "ts_ms",
+    value_col: str = "value",
+) -> DataFrame:
+    """EXACT last-observation-carried-forward over a stream — including
+    out-of-order arrivals, which the naive "fill from the latest seen
+    observation" streaming version gets wrong (an observation arriving
+    late would leave earlier-emitted gaps stale). Each key emits once
+    the watermark passes it, with the same (ts, event_id)-ordered LOCF
+    the batch operator applies — asserted equivalent to
+    behavior.forward_fill in tests/test_streaming.py."""
+
+    def recurse(vals: np.ndarray) -> dict[str, np.ndarray]:
+        # pandas ffill over the (ts, event_id)-sorted values is exactly
+        # LOCF; NaN survives Arrow as the null the output schema expects
+        return {"value_filled": pd.Series(vals).ffill().to_numpy()}
+
+    return _flush_in_event_time(
+        events, user_col, id_col, ts_col, value_col, recurse, "value_filled double"
+    )
 
 
 def streaming_ewma(
@@ -240,87 +252,32 @@ def streaming_ewma(
     value_col: str = "value",
 ) -> DataFrame:
     """EXACT per-key exponentially-weighted moving average over a
-    stream: rows buffer in state until the event-time watermark passes
-    the key's last activity (the streaming_forward_fill contract — a
-    late arrival inside the horizon re-sorts into place, so the
-    recursion order is the EVENT-TIME order, not the arrival order),
-    then the key flushes s_i = α·x_i + (1−α)·s_{i−1} with s_0 = x_0 in
-    one event-time pass. ``prev_s`` (the smoothed value BEFORE each
+    stream: a late arrival inside the horizon re-sorts into place, so
+    the recursion order is the EVENT-TIME order, not the arrival order.
+    Each key flushes s_i = α·x_i + (1−α)·s_{i−1} with s_0 = x_0 in one
+    event-time pass. ``prev_s`` (the smoothed value BEFORE each
     observation) rides along so a consumer can score deviation
     |x_i − s_{i−1}| — the streaming anomaly primitive.
 
     The recursion is evaluated one literal double op at a time in
     (ts, event_id) order, so an engine replaying the same recursion —
     the DuckDB recursive-CTE oracle — reproduces every double
-    bit-for-bit. State bounds and eviction are identical to
-    streaming_forward_fill: per-key rows within the watermark horizon,
-    EventTimeTimeout flush."""
-    src = events.select(
-        F.col(user_col).alias("user_id"),
-        F.col(id_col).alias("event_id"),
-        F.col(ts_col).cast("long").alias("ts_ms"),
-        F.col(value_col).cast("double").alias("value"),
-        F.timestamp_millis(F.col(ts_col).cast("long")).alias("ts"),
-    ).withWatermark("ts", "1 hour")
+    bit-for-bit."""
 
-    def fold(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            ids, tss, vals = state.get
-            state.remove()
-            a_ids = np.asarray(ids, dtype=np.int64)
-            a_tss = np.asarray(tss, dtype=np.int64)
-            a_vals = np.asarray(vals, dtype=np.float64)
-            order = np.lexsort((a_ids, a_tss))
-            a_ids, a_tss, a_vals = a_ids[order], a_tss[order], a_vals[order]
-            ewma = np.empty(len(a_vals), dtype=np.float64)
-            prev = np.empty(len(a_vals), dtype=np.float64)
-            s = float("nan")
-            for i, x in enumerate(a_vals):
-                prev[i] = s
-                # same literal-by-literal recursion the oracle replays
-                s = x if i == 0 else alpha * x + (1.0 - alpha) * s
-                ewma[i] = s
-            yield pd.DataFrame(
-                {
-                    "user_id": np.full(len(a_ids), key[0], dtype=np.int64),
-                    "event_id": a_ids,
-                    "ts_ms": a_tss,
-                    "value": a_vals,
-                    "ewma": ewma,
-                    "prev_s": prev,
-                }
-            )
-            return
-        ids, tss, vals = (
-            (list(state.get[0]), list(state.get[1]), list(state.get[2]))
-            if state.exists
-            else ([], [], [])
-        )
-        for pdf in pdfs:
-            ids.extend(pdf["event_id"].astype("int64").tolist())
-            tss.extend(pdf["ts_ms"].astype("int64").tolist())
-            vals.extend(pdf["value"].astype("float64").tolist())
-        state.update((ids, tss, vals))
-        state.setTimeoutTimestamp(max(tss) + 1)
-        return
-        yield  # pragma: no cover — makes the function a generator
+    def recurse(vals: np.ndarray) -> dict[str, np.ndarray]:
+        ewma = np.empty(len(vals), dtype=np.float64)
+        prev = np.empty(len(vals), dtype=np.float64)
+        s = float("nan")
+        for i, x in enumerate(vals):
+            prev[i] = s
+            # same literal-by-literal recursion the oracle replays
+            s = x if i == 0 else alpha * x + (1.0 - alpha) * s
+            ewma[i] = s
+        return {"ewma": ewma, "prev_s": prev}
 
-    return src.groupBy("user_id").applyInPandasWithState(
-        fold,
-        outputStructType=_EWMA_OUTPUT,
-        stateStructType=_EWMA_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _flush_in_event_time(
+        events, user_col, id_col, ts_col, value_col, recurse, "ewma double, prev_s double"
     )
-
-
-_HOLT_OUTPUT = (
-    "user_id long, event_id long, ts_ms long, value double, "
-    "level double, trend double"
-)
-_HOLT_STATE = "ids array<long>, tss array<long>, vals array<double>"
 
 
 def streaming_holt(
@@ -341,76 +298,29 @@ def streaming_holt(
         l_i = α·x_i + (1−α)(l_{i−1} + b_{i−1})
         b_i = β(l_i − l_{i−1}) + (1−β)·b_{i−1}
 
-    Rows buffer in per-key state until the event-time watermark passes
-    the key's last activity, then flush in (ts, event_id) order — the
-    streaming_forward_fill contract: within-horizon arrival order can
-    never change the recursion. Evaluated one literal double op at a
-    time, so the DuckDB recursive-CTE oracle replays every bit. State
-    bounds/eviction identical to streaming_ewma (per-key rows within
-    the horizon, EventTimeTimeout flush)."""
+    Each key flushes in (ts, event_id) order, so within-horizon arrival
+    order can never change the recursion. Evaluated one literal double
+    op at a time, so the DuckDB recursive-CTE oracle replays every
+    bit."""
     one_m_a = 1.0 - alpha
     one_m_b = 1.0 - beta
-    src = events.select(
-        F.col(user_col).alias("user_id"),
-        F.col(id_col).alias("event_id"),
-        F.col(ts_col).cast("long").alias("ts_ms"),
-        F.col(value_col).cast("double").alias("value"),
-        F.timestamp_millis(F.col(ts_col).cast("long")).alias("ts"),
-    ).withWatermark("ts", "1 hour")
 
-    def fold(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            ids, tss, vals = state.get
-            state.remove()
-            a_ids = np.asarray(ids, dtype=np.int64)
-            a_tss = np.asarray(tss, dtype=np.int64)
-            a_vals = np.asarray(vals, dtype=np.float64)
-            order = np.lexsort((a_ids, a_tss))
-            a_ids, a_tss, a_vals = a_ids[order], a_tss[order], a_vals[order]
-            levels = np.empty(len(a_vals), dtype=np.float64)
-            trends = np.empty(len(a_vals), dtype=np.float64)
-            l = b = 0.0
-            for i, x in enumerate(a_vals):
-                if i == 0:
-                    l, b = x, 0.0
-                else:
-                    # same literal-by-literal chain the oracle replays
-                    ln = alpha * x + one_m_a * (l + b)
-                    b = beta * (ln - l) + one_m_b * b
-                    l = ln
-                levels[i] = l
-                trends[i] = b
-            yield pd.DataFrame(
-                {
-                    "user_id": np.full(len(a_ids), key[0], dtype=np.int64),
-                    "event_id": a_ids,
-                    "ts_ms": a_tss,
-                    "value": a_vals,
-                    "level": levels,
-                    "trend": trends,
-                }
-            )
-            return
-        ids, tss, vals = (
-            (list(state.get[0]), list(state.get[1]), list(state.get[2]))
-            if state.exists
-            else ([], [], [])
-        )
-        for pdf in pdfs:
-            ids.extend(pdf["event_id"].astype("int64").tolist())
-            tss.extend(pdf["ts_ms"].astype("int64").tolist())
-            vals.extend(pdf["value"].astype("float64").tolist())
-        state.update((ids, tss, vals))
-        state.setTimeoutTimestamp(max(tss) + 1)
-        return
-        yield  # pragma: no cover — makes the function a generator
+    def recurse(vals: np.ndarray) -> dict[str, np.ndarray]:
+        levels = np.empty(len(vals), dtype=np.float64)
+        trends = np.empty(len(vals), dtype=np.float64)
+        l = b = 0.0
+        for i, x in enumerate(vals):
+            if i == 0:
+                l, b = x, 0.0
+            else:
+                # same literal-by-literal chain the oracle replays
+                ln = alpha * x + one_m_a * (l + b)
+                b = beta * (ln - l) + one_m_b * b
+                l = ln
+            levels[i] = l
+            trends[i] = b
+        return {"level": levels, "trend": trends}
 
-    return src.groupBy("user_id").applyInPandasWithState(
-        fold,
-        outputStructType=_HOLT_OUTPUT,
-        stateStructType=_HOLT_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _flush_in_event_time(
+        events, user_col, id_col, ts_col, value_col, recurse, "level double, trend double"
     )

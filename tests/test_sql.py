@@ -13,21 +13,21 @@ def parse(stmt):
 
 
 def test_get_inode_set():
-    assert parse("SELECT * FROM files").query.set == "files"
+    assert parse("SELECT * FROM files").set == "files"
 
 
 def test_sum_filesize_by_user():
     p = parse("select user,sum(fileSize) from files group by user")
-    assert p.query.set == "files"
-    assert p.query.filters == []
-    assert p.query.sums == ["fileSize"]
-    assert p.query.type == "user"
-    assert p.query.finds == []
+    assert p.set == "files"
+    assert p.filters == []
+    assert p.sums == ["fileSize"]
+    assert p.type == "user"
+    assert p.finds == []
 
 
 def test_single_filter():
     p = parse("SELECT * FROM files WHERE fileSize = 0")
-    assert p.query.filters == [("fileSize", "eq", "0")]
+    assert p.filters == [("fileSize", "eq", "0")]
 
 
 def test_or_unsupported():
@@ -37,66 +37,66 @@ def test_or_unsupported():
 
 def test_double_filter_and():
     p = parse("SELECT * FROM files WHERE fileSize = 0 AND user != pjeli")
-    assert p.query.filters == [("fileSize", "eq", "0"), ("user", "notEq", "pjeli")]
+    assert p.filters == [("fileSize", "eq", "0"), ("user", "notEq", "pjeli")]
 
 
 def test_sum_with_filters(engine):
     p = parse("SELECT SUM(diskspaceConsumed) FROM files WHERE fileSize = 0 AND user != pjeli")
-    assert p.query.sums == ["diskspaceConsumed"]
-    assert engine.run(p.query).columns == ["diskspaceConsumed"]  # one scalar sum
+    assert p.sums == ["diskspaceConsumed"]
+    assert engine.run(p).columns == ["diskspaceConsumed"]  # one scalar sum
 
 
 def test_count_star():
     p = parse("SELECT COUNT(*) FROM files WHERE fileSize = 0 AND user != pjeli")
-    assert p.query.sums == ["count"]
+    assert p.sums == ["count"]
 
 
 def test_max_becomes_find(engine):
     p = parse("SELECT MAX(diskspaceConsumed) FROM files WHERE fileSize > 0 AND user != pjeli")
-    assert p.query.sums == []
-    assert p.query.finds == ["max:diskspaceConsumed"]
-    assert p.query.filters == [("fileSize", "gt", "0"), ("user", "notEq", "pjeli")]
-    assert engine.run(p.query).columns == ["path", "diskspaceConsumed"]  # the extremal row
+    assert p.sums == []
+    assert p.finds == ["max:diskspaceConsumed"]
+    assert p.filters == [("fileSize", "gt", "0"), ("user", "notEq", "pjeli")]
+    assert engine.run(p).columns == ["path", "diskspaceConsumed"]  # the extremal row
 
 
 def test_like_startswith():
     p = parse(
         "SELECT MAX(diskspaceConsumed) FROM files WHERE path LIKE '/tmp/%' AND user != pjeli"
     )
-    assert p.query.filters == [("path", "startsWith", "/tmp/"), ("user", "notEq", "pjeli")]
+    assert p.filters == [("path", "startsWith", "/tmp/"), ("user", "notEq", "pjeli")]
 
 
 def test_like_placement_rules():
-    assert parse("SELECT * FROM files WHERE name LIKE '%x%'").query.filters == [
+    assert parse("SELECT * FROM files WHERE name LIKE '%x%'").filters == [
         ("name", "contains", "x")
     ]
-    assert parse("SELECT * FROM files WHERE name LIKE '%x'").query.filters == [
+    assert parse("SELECT * FROM files WHERE name LIKE '%x'").filters == [
         ("name", "endsWith", "x")
     ]
-    assert parse("SELECT * FROM files WHERE name LIKE 'x%'").query.filters == [
+    assert parse("SELECT * FROM files WHERE name LIKE 'x%'").filters == [
         ("name", "startsWith", "x")
     ]
-    assert parse("SELECT * FROM files WHERE name LIKE 'x'").query.filters == [
+    assert parse("SELECT * FROM files WHERE name LIKE 'x'").filters == [
         ("name", "eq", "x")
     ]
 
 
 def test_group_by_count_with_filter(engine):
     p = parse("SELECT user,COUNT(*) FROM files WHERE fileSize = 0 GROUP BY user")
-    assert (p.query.type, p.query.sums) == ("user", ["count"])
-    assert engine.run(p.query).columns == ["user", "count"]  # a one-level histogram
+    assert (p.type, p.sums) == ("user", ["count"])
+    assert engine.run(p).columns == ["user", "count"]  # a one-level histogram
 
 
 def test_limit():
     p = parse("SELECT COUNT(*) FROM files WHERE fileSize = 0 AND user != pjeli LIMIT 1000")
-    assert p.query.limit == 1000
+    assert p.limit == 1000
 
 
 def test_between_dates():
     p = parse(
         "SELECT COUNT(*) FROM files WHERE modTime BETWEEN '2024-01-01' AND '2024-06-01'"
     )
-    assert p.query.filters == [
+    assert p.filters == [
         ("modTime", "gte", "1704067200000"),
         ("modTime", "lte", "1717200000000"),
     ]
@@ -104,14 +104,14 @@ def test_between_dates():
 
 def test_between_swapped_and_equal():
     p = parse("SELECT COUNT(*) FROM files WHERE modTime BETWEEN '2024-06-01' AND '2024-01-01'")
-    assert p.query.filters[0] == ("modTime", "gte", "1704067200000")
+    assert p.filters[0] == ("modTime", "gte", "1704067200000")
     p2 = parse("SELECT COUNT(*) FROM files WHERE modTime BETWEEN '2024-01-01' AND '2024-01-01'")
-    assert p2.query.filters == [("modTime", "eq", "1704067200000")]
+    assert p2.filters == [("modTime", "eq", "1704067200000")]
 
 
 def test_order_by_sort():
     p = parse("SELECT user,COUNT(*) FROM files GROUP BY user ORDER BY count DESC")
-    assert p.query.sort == "desc"
+    assert p.sort == "desc"
 
 
 def test_set_knobs():

@@ -4,12 +4,13 @@ query) for both the snapshot-refresh path and the change-log tailer."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from nnanalytics_spark.core.ir import Query
 from nnanalytics_spark.inode import fixture
 from nnanalytics_spark.inode.engine import INodeEngine
-from nnanalytics_spark.streaming import refresh
+from nnanalytics_spark.streaming import refresh, stateful
 
 NOW = fixture.NOW_MS
 
@@ -428,24 +429,47 @@ def test_streaming_forward_fill_exact_under_reordering(spark, tmp_path):
     assert got[20] is None
 
 
-def test_streaming_ewma_exact_under_reordering(spark, tmp_path):
-    """Buffered streaming EWMA recurses in EVENT-TIME order even when an
-    early observation arrives in a LATER micro-batch — an
-    emit-immediately EWMA would have smoothed 9.0 before seeing 1.0."""
-    from nnanalytics_spark.streaming.stateful import streaming_ewma
-
+@pytest.mark.parametrize(
+    "op, cols, want",
+    [
+        pytest.param(
+            lambda s: stateful.streaming_ewma(s, alpha=0.5),
+            ("ewma", "prev_s"),
+            # event-time order 10, 11, 12: s = 1.0, then 0.5*9+0.5*1 =
+            # 5.0, then 0.5*5+0.5*5 = 5.0; prev_s trails by one step. The
+            # first observation has no prior smoothed value: the NaN the
+            # fold emits crosses Arrow as SQL NULL (matching the oracle)
+            {10: (1.0, None), 11: (5.0, 1.0), 12: (5.0, 5.0)},
+            id="ewma",
+        ),
+        pytest.param(
+            lambda s: stateful.streaming_holt(s, alpha=0.5, beta=0.5),
+            ("level", "trend"),
+            # event-time order: l = 1, b = 0; then l = 0.5*9+0.5*(1+0) =
+            # 5, b = 0.5*(5-1)+0.5*0 = 2; then l = 0.5*5+0.5*(5+2) = 6,
+            # b = 0.5*(6-5)+0.5*2 = 1.5
+            {10: (1.0, 0.0), 11: (5.0, 2.0), 12: (6.0, 1.5)},
+            id="holt",
+        ),
+    ],
+)
+def test_streaming_smoothing_exact_under_reordering(spark, tmp_path, op, cols, want):
+    """Buffered streaming EWMA and Holt recurse in EVENT-TIME order even
+    when an early observation arrives in a LATER micro-batch — an
+    emit-immediately recursion would have smoothed 9.0 before seeing
+    1.0."""
     MIN = 60 * 1000
     batch1 = [(1, 11, 10 * MIN, 9.0), (1, 12, 20 * MIN, 5.0)]
     batch2 = [(1, 10, 5 * MIN, 1.0)]  # lands late, sorts FIRST
     sentinel1 = [(-1, 0, 49 * 3600 * 1000, 0.0)]
     sentinel2 = [(-2, 1, 50 * 3600 * 1000, 0.0)]
-    src = str(tmp_path / "ewma_stream")
+    src = str(tmp_path / "smoothing_stream")
     schema = "user_id long, event_id long, ts_ms long, value double"
     for b in (batch1, batch2, sentinel1, sentinel2):
         spark.createDataFrame(b, schema).coalesce(1).write.mode("append").parquet(src)
 
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    out = streaming_ewma(stream, alpha=0.5)
+    out = op(stream)
     rows: list = []
 
     def sink(batch_df, _epoch):
@@ -456,12 +480,5 @@ def test_streaming_ewma_exact_under_reordering(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    got = {r["event_id"]: (r["ewma"], r["prev_s"]) for r in rows if r["user_id"] > 0}
-    # event-time order 10, 11, 12: s = 1.0, then 0.5*9+0.5*1 = 5.0,
-    # then 0.5*5+0.5*5 = 5.0; prev_s trails by one step (NaN first)
-    assert got[10][0] == 1.0
-    assert got[11] == (5.0, 1.0)
-    assert got[12] == (5.0, 5.0)
-    # the first observation has no prior smoothed value; the NaN the
-    # fold emits crosses Arrow as SQL NULL (matching the oracle's NULL)
-    assert got[10][1] is None
+    got = {r["event_id"]: tuple(r[c] for c in cols) for r in rows if r["user_id"] > 0}
+    assert got == want
