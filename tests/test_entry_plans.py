@@ -725,8 +725,9 @@ def test_grouped_kernel_width_pinned_against_aqe_floor(spark):
     # the kernel call sites route through the pin (source-level)
     import inspect
 
-    for fn in (_s.within_cell_pairs_above, _s._blocked_local_topk):
+    for fn in (_s._block_pair_kernel, _s._blocked_local_topk):
         assert "_pin_kernel_width" in inspect.getsource(fn), fn.__name__
+    assert "_block_pair_kernel" in inspect.getsource(_s.within_cell_pairs_above)
     # session default: the compute-dense floor is active
     assert spark.conf.get(
         "spark.sql.adaptive.coalescePartitions.minPartitionSize"

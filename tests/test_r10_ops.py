@@ -64,7 +64,8 @@ def test_all_pairs_blocked_kernel_width_pinned(spark):
     compute-dense shuffle into near-empty Arrow tasks."""
     from nnanalytics_spark.pipeline import similarity as _s
 
-    assert "_pin_kernel_width" in inspect.getsource(_s.all_pairs_above_blocked)
+    assert "_block_pair_kernel" in inspect.getsource(_s.all_pairs_above_blocked)
+    assert "_pin_kernel_width" in inspect.getsource(_s._block_pair_kernel)
     # behavior unchanged: blocked result still matches the broadcast path
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(300)
     blocked = sorted(
